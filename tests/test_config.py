@@ -103,6 +103,21 @@ def test_source_config_full_roundtrip():
     assert cfg.metric_thresholds[0].comparison == "gt"
 
 
+@pytest.mark.parametrize("commit", ["rename", "manifest"])
+def test_destination_commit_is_read(commit):
+    cfg = SourceConfig.from_dict(
+        {"name": "s", "input_path": "/data", "destination": {"path": "/out", "commit": commit}}
+    )
+    assert cfg.destination.commit == commit
+
+
+def test_destination_commit_unknown_rejected():
+    with pytest.raises(ValueError, match="destination.commit"):
+        SourceConfig.from_dict(
+            {"name": "s", "input_path": "/data", "destination": {"path": "/out", "commit": "copy"}}
+        )
+
+
 def test_reference_sample_source_yaml_loads_unchanged():
     """THE migration claim, tested against the reference's real on-disk file:
     /root/reference/src/config/sources/sample_source.yaml loads into a full

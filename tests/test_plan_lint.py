@@ -374,3 +374,51 @@ def test_catalog_driver_collects_are_bounded():
             "catalog .collect() without a .limit(_MAX_DRIVER_QUERIES) cap "
             f"near: ...{src[max(0, m.start() - 120) : m.end()]!r}"
         )
+
+
+def test_directories_commit_only_through_the_commit_module():
+    """Every persisted directory commits through ``sinks/commit.py``; the
+    IVF per-cell rebalance journal in ``operators/similarity.py`` is the
+    one exception. No other package module may rename a directory into
+    place or trust Spark's ``_SUCCESS`` marker as a completeness check —
+    a seventh hand-rolled staging swap fails here."""
+    import ast
+    import pathlib
+
+    import universal_aws_data_pipeline_spark as pkg_mod
+
+    pkg = pathlib.Path(pkg_mod.__file__).parent
+    allowed = {pkg / "sinks" / "commit.py", pkg / "operators" / "similarity.py"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path in allowed:
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        where = path.relative_to(pkg)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("rename", "replace")
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ):
+                offenders.append(f"{where}:{node.lineno} os.{node.attr}")
+            elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                names = {a.name for a in node.names} & {"rename", "replace"}
+                offenders += [f"{where}:{node.lineno} from os import {n}" for n in sorted(names)]
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "_SUCCESS" in node.value
+                and id(node) not in docstrings
+            ):
+                offenders.append(f"{where}:{node.lineno} _SUCCESS")
+    assert offenders == [], offenders

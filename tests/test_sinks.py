@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from universal_aws_data_pipeline_spark.config.model import DestinationConfig
 from universal_aws_data_pipeline_spark.sinks.tables import (
     TolerantLoadError,
-    compact_table,
     write_partitioned,
     write_warehouse_table,
 )
@@ -73,11 +72,13 @@ def test_tolerant_load_cap(spark, tmp_path):
 
 
 def test_compact_table(spark, df, tmp_path):
+    from universal_aws_data_pipeline_spark.operators.maintenance import compact_table
+
     path = str(tmp_path / "frag")
     df.repartition(16).write.parquet(path)
     n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert n_before >= 8
-    compact_table(spark.read.parquet(path), path, target_file_mb=256)
+    compact_table(spark, path)
     n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert n_after == 1  # tiny table → one file
     assert spark.read.parquet(path).count() == 30
@@ -212,7 +213,7 @@ def test_manifest_crash_between_data_write_and_commit_keeps_old_table(
     an object store leaves a torn table. Readers must keep seeing the old
     version, and the next successful commit must still work and GC the
     orphan."""
-    from universal_aws_data_pipeline_spark.sinks import tables
+    from universal_aws_data_pipeline_spark.sinks import commit, tables
 
     path = str(tmp_path / "mt")
     tables.write_table_manifest_commit(df, path)
@@ -221,7 +222,7 @@ def test_manifest_crash_between_data_write_and_commit_keeps_old_table(
     def boom(*a, **k):
         raise OSError("injected crash before manifest commit")
 
-    monkeypatch.setattr(tables, "_commit_manifest", boom)
+    monkeypatch.setattr(commit, "_commit_manifest", boom)
     with pytest.raises(OSError, match="injected crash"):
         tables.write_table_manifest_commit(df.filter("id < 3"), path)
     monkeypatch.undo()
@@ -276,7 +277,7 @@ def test_manifest_commit_e2e_sf01_crash_and_retry_converge(spark, tmp_path, monk
     collecting the orphan. Commit overhead at this scale is recorded in
     PERF.md (the manifest PUT is one small-object replace; data files are
     written once, never renamed)."""
-    from universal_aws_data_pipeline_spark.sinks import tables
+    from universal_aws_data_pipeline_spark.sinks import commit, tables
     from universal_aws_data_pipeline_spark.sinks.tables import read_manifest_table
 
     li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet").select(
@@ -291,17 +292,17 @@ def test_manifest_commit_e2e_sf01_crash_and_retry_converge(spark, tmp_path, monk
     v0 = tables._read_manifest(path)["current"]
 
     # crash in the window: version dir fully written, manifest never moved
-    real_commit = tables._commit_manifest
+    real_commit = commit._commit_manifest
 
     def boom(*a, **k):
         raise OSError("injected crash before manifest PUT")
 
-    monkeypatch.setattr(tables, "_commit_manifest", boom)
+    monkeypatch.setattr(commit, "_commit_manifest", boom)
     update = li.filter(F.col("l_returnflag") != "R")
     n_update = update.count()
     with pytest.raises(OSError, match="injected crash"):
         write_warehouse_table(update, dest)
-    monkeypatch.setattr(tables, "_commit_manifest", real_commit)
+    monkeypatch.setattr(commit, "_commit_manifest", real_commit)
 
     # reader stability: still the full v0 table, orphan invisible
     m = tables._read_manifest(path)

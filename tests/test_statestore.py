@@ -1,4 +1,6 @@
-"""Crash-injection tests for the foreachBatch state commit protocol.
+"""Crash-injection tests for the directory commit protocol
+(``sinks/commit.py``) and the foreachBatch state, SCD2 and IVF commits
+built on or beside it.
 
 The two holes being regression-tested (round-4 ADVICE):
 1. a crash between the table->old and staging->table renames used to leave
@@ -15,10 +17,13 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
+import shutil
 
 import pytest
 
 from universal_aws_data_pipeline_spark.operators import statestore
+from universal_aws_data_pipeline_spark.sinks import commit
 
 
 def _toks(spark, words):
@@ -202,6 +207,228 @@ def test_recover_prefers_newest_complete_staging(tmp_path):
     assert os.path.exists(table)
     assert statestore.last_folded(table) == 7
     assert not os.path.exists(old) and not os.path.exists(stale)
+
+
+# ---------------------------------------------------------------------------
+# sinks/commit.py: a crash at every filesystem step converges
+# ---------------------------------------------------------------------------
+class _Crash(Exception):
+    pass
+
+
+def _put(d, name, content):
+    with open(os.path.join(d, name), "w") as fh:
+        fh.write(content)
+
+
+def _writer(content, step=lambda: None):
+    """A two-file 'table' write; ``step`` runs between the files, so a crash
+    there leaves a partial data dir."""
+
+    def write(d):
+        os.makedirs(d)
+        _put(d, "part-0", content)
+        step()
+        _put(d, "part-1", content)
+
+    return write
+
+
+def _read(d):
+    """The content of a complete test table, None when absent, 'TORN' else."""
+    if not os.path.isdir(d):
+        return None
+    parts = [(pathlib.Path(d) / f).read_text() for f in ("part-0", "part-1") if os.path.exists(os.path.join(d, f))]
+    return parts[0] if len(parts) == 2 and parts[0] == parts[1] else "TORN"
+
+
+class _Process:
+    """Counts the filesystem steps of one commit — the data write and every
+    os.rename / os.replace / shutil.rmtree — and dies at step ``crash_at``:
+    that step and every later one raise, as after a real crash."""
+
+    def __init__(self, monkeypatch, crash_at):
+        self.n, self.crash_at = 0, crash_at
+        for mod, name in ((os, "rename"), (os, "replace"), (shutil, "rmtree")):
+            monkeypatch.setattr(mod, name, self._guard(getattr(mod, name)))
+
+    def step(self):
+        self.n += 1
+        if self.n > self.crash_at:
+            raise _Crash(f"crash at step {self.crash_at}")
+
+    def _guard(self, real):
+        def fn(*a, **k):
+            self.step()
+            return real(*a, **k)
+
+        return fn
+
+
+def _commit(kind, target, write):
+    if kind == "commit_version":
+        commit.commit_version(target, write, "test")
+    else:
+        commit.replace_dir(target, write, {"k": kind})
+
+
+def _current(kind, target):
+    if kind != "commit_version":
+        return _read(target)
+    m = commit._read_manifest(target)
+    return _read(os.path.join(target, m["current"])) if m else None
+
+
+# kind -> (contents committed before the crashed commit, its step count)
+_COMMITS = {
+    "replace_dir": (["old"], 5),  # write, meta replace, 2 renames, rmtree(old)
+    "replace_dir_first": ([], 3),  # write, meta replace, rename
+    "commit_version": (["older", "old"], 3),  # write, manifest replace, GC
+}
+
+
+@pytest.mark.parametrize(
+    "kind,crash_at", [(k, i) for k, (_, n) in _COMMITS.items() for i in range(n + 1)]
+)
+def test_commit_converges_after_a_crash_at_every_step(tmp_path, monkeypatch, kind, crash_at):
+    """After a crash at any step, recovery (``recover`` for a replaced dir,
+    the manifest for a versioned table) shows the old or the new content,
+    never a torn or missing one, and the next commit leaves no stray
+    staging, old or version dirs. ``crash_at == steps`` is the uncrashed
+    run, which pins the step count so every step is covered."""
+    target = str(tmp_path / "t")
+    before, n_steps = _COMMITS[kind]
+    for content in before:
+        _commit(kind, target, _writer(content))
+    old = before[-1] if before else None
+
+    proc = _Process(monkeypatch, crash_at)
+    if crash_at < n_steps:
+        with pytest.raises(_Crash):
+            _commit(kind, target, _writer("new", proc.step))
+    else:
+        _commit(kind, target, _writer("new", proc.step))
+        assert proc.n == n_steps
+    monkeypatch.undo()
+
+    if kind != "commit_version":
+        commit.recover(target)
+        assert os.listdir(tmp_path) == (["t"] if os.path.exists(target) else [])
+    assert _current(kind, target) in ({old, "new"} if crash_at < n_steps else {"new"})
+
+    _commit(kind, target, _writer("next"))
+    assert _current(kind, target) == "next"
+    if kind == "commit_version":
+        m = commit._read_manifest(target)
+        assert sorted(os.listdir(target)) == sorted(["_manifest.json", m["current"], *m["previous"]])
+        assert all(_read(os.path.join(target, v)) != "TORN" for v in m["previous"])
+    else:
+        assert os.listdir(tmp_path) == ["t"]
+        assert commit.read_meta(target) == {"k": kind}
+
+
+def test_scd2_stream_crash_between_renames_replays(spark, tmp_path, monkeypatch):
+    """A crash between moving the live dimension away and moving the merged
+    one in used to leave no dimension at all, and the replay of the batch
+    then failed reading it. The complete staging is now promoted and the
+    replay of the crashed batch is a no-op."""
+    from universal_aws_data_pipeline_spark.operators.scd import scd2_stream_fn
+
+    schema = "cust_id LONG, city STRING, valid_from STRING, valid_to STRING, is_current BOOLEAN"
+    dim_path = str(tmp_path / "dim")
+    spark.createDataFrame(
+        [(1, "NY", "2024-01-01", None, True), (2, "LA", "2024-01-01", None, True)], schema
+    ).write.parquet(dim_path)
+    fn = scd2_stream_fn(dim_path, key="cust_id", tracked=["city"], effective="eff")
+    upd = "cust_id LONG, city STRING, eff STRING"
+    fn(spark.createDataFrame([(1, "SF", "2024-02-01")], upd), 0)
+
+    real = os.rename
+    calls = {"n": 0}
+
+    def crash_on_second_rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("injected crash between renames")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    batch1 = spark.createDataFrame([(2, "SEA", "2024-03-01")], upd)
+    with pytest.raises(OSError, match="between renames"):
+        fn(batch1, 1)
+    monkeypatch.undo()
+
+    fn(batch1, 1)  # Structured Streaming replays the batch after restart
+    got = sorted(map(tuple, spark.read.parquet(dim_path).collect()))
+    assert got == [
+        (1, "NY", "2024-01-01", "2024-02-01", False),
+        (1, "SF", "2024-02-01", None, True),
+        (2, "LA", "2024-01-01", "2024-03-01", False),
+        (2, "SEA", "2024-03-01", None, True),
+    ]
+    assert os.listdir(tmp_path) == ["dim"]
+
+
+# ---------------------------------------------------------------------------
+# build-once catalog artifacts (plans/_shared.py::_artifact) track validity
+# ---------------------------------------------------------------------------
+@pytest.fixture()
+def artifact_env(tmp_path, monkeypatch):
+    """A one-file dataset dir and an empty artifact cache root."""
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "cache"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "documents.parquet").write_text("v1")
+    return str(sf)
+
+
+def test_artifact_rebuilds_when_an_input_file_changes(spark, artifact_env):
+    from universal_aws_data_pipeline_spark.plans._shared import _artifact
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    for _ in range(2):
+        assert _artifact(spark, "k", artifact_env, "n", build).count() == 3
+    assert len(builds) == 1
+    doc = os.path.join(artifact_env, "documents.parquet")
+    st = os.stat(doc)
+    os.utime(doc, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    _artifact(spark, "k", artifact_env, "n", build)
+    assert len(builds) == 2
+
+
+def test_cluster_labels_rebuild_when_pairs_are_rebuilt(spark, artifact_env, monkeypatch):
+    """The CC labels record the commit id of the q43 pair artifact they were
+    built from; a pair artifact rebuilt under them (here: scrubbed, then
+    rebuilt by a pair consumer) makes the labels stale."""
+    from universal_aws_data_pipeline_spark.plans import _shared
+
+    q15 = []
+
+    def fake_q15(spark_, sf_dir):
+        q15.append(1)
+        return spark.createDataFrame([(1, 2, 0.9), (2, 3, 0.8)], "id_a long, id_b long, jaccard double")
+
+    monkeypatch.setattr(_shared.QUERIES["q15_neardup_minhash_lsh"], "fn", fake_q15)
+    labels_dir = os.path.join(_shared._artifact_dir("neardup_clusters", artifact_env), "labels")
+    pairs_dir = os.path.join(_shared._artifact_dir("neardup_pairs", artifact_env), "q43")
+
+    _shared._neardup_cluster_labels(spark, artifact_env)
+    first = commit.read_meta(labels_dir)
+    assert first["deps"] == {pairs_dir: commit.read_meta(pairs_dir)["commit"]}
+    _shared._neardup_cluster_labels(spark, artifact_env)
+    assert commit.read_meta(labels_dir)["commit"] == first["commit"] and len(q15) == 1
+
+    shutil.rmtree(pairs_dir)
+    _shared._neardup_pairs(spark, artifact_env)
+    assert len(q15) == 2
+    labels = _shared._neardup_cluster_labels(spark, artifact_env)
+    assert commit.read_meta(labels_dir)["commit"] != first["commit"]
+    assert sorted(map(tuple, labels.collect())) == [(1, 1), (2, 1), (3, 1)]
 
 
 # ---------------------------------------------------------------------------

@@ -225,6 +225,9 @@ class SourceConfig:
         dest = None
         if "destination" in raw:
             d = raw["destination"]
+            commit = d.get("commit", "rename")
+            if commit not in ("rename", "manifest"):
+                raise ValueError(f"unknown destination.commit {commit!r}: expected 'rename' or 'manifest'")
             dest = DestinationConfig(
                 path=d["path"],
                 format=d.get("format", "parquet"),
@@ -235,6 +238,7 @@ class SourceConfig:
                 max_errors=int(d.get("max_errors", 0)),
                 jdbc_url=d.get("jdbc_url"),
                 jdbc_driver=d.get("jdbc_driver"),
+                commit=commit,
             )
         checks = [
             QualityCheck(

@@ -499,20 +499,23 @@ def incremental_neardup_filter_indexed(
     return new_docs.join(dupes, id_col, "left_anti")
 
 
-def _digest_bitmaps(digests: Column, n_words: int = 4) -> list[Column]:
-    """Bit-signature of a digest set: a ``64*n_words``-bit bitmap packed
-    into ``n_words`` longs, bit ``d mod 64`` of word ``(d mod 64n) div 64``
-    set per element — the pair-level bitmap filter of the set-similarity-
-    join literature (the bit-signature cousin of PPJoin+'s suffix filter;
-    both appear in Mann/Augsten/Bouros's empirical evaluation of set
-    similarity joins).
+_BITMAP_WORDS = 4  # 64-bit words per document bit-signature: 256 bits
 
-    The pruning bound is EXACT, not probabilistic: every bit set in A's
-    bitmap but not B's is witnessed by at least one element of A\\B, and
-    distinct bits need distinct witnesses, so
 
-        popcount(bits(A) XOR bits(B)) <= |A Δ B|        (Jaccard form)
-        popcount(bits(A) & ~bits(B)) <= |A \\ B|        (containment form)
+def _bitmap_prune(pairs: DataFrame, bm: DataFrame, mode: str, max_pc: Column) -> DataFrame:
+    """Pair-level bitmap filter of the set-similarity-join literature (the
+    bit-signature cousin of PPJoin+'s suffix filter; both appear in
+    Mann/Augsten/Bouros's empirical evaluation of set similarity joins).
+
+    ``bm`` is an ``(id, digest array)`` table, one row per document. Its
+    bit-signature is a ``64*_BITMAP_WORDS``-bit bitmap packed into longs,
+    bit ``d mod 64`` of word ``(d mod 64n) div 64`` set per element. The
+    pruning bound is EXACT, not probabilistic: every bit set in A's bitmap
+    but not B's is witnessed by at least one element of A\\B, and distinct
+    bits need distinct witnesses, so
+
+        popcount(bits(A) XOR bits(B)) <= |A Δ B|        (mode "jaccard")
+        popcount(bits(A) & ~bits(B)) <= |A \\ B|        (mode "containment")
 
     Collisions only LOWER the left side — the filter can under-prune,
     never over-prune, so recall is untouched at any width. 256 bits
@@ -520,15 +523,27 @@ def _digest_bitmaps(digests: Column, n_words: int = 4) -> list[Column]:
     non-matching pair (~77) far above the Jaccard-0.5 admission bound
     (~35), which is what gives the filter its measured 98.8% candidate
     kill on the sf0.1 corpus (494,223 -> 6,024, exactly the true pair
-    set; see OPTIMIZATION_r14.md)."""
-    n_bits = 64 * n_words
-    return [
-        F.expr(
-            f"aggregate(filter(_dx, d -> pmod(d, {n_bits}) div 64 = {k}), 0L, "
-            f"(acc, d) -> acc | shiftleft(1L, cast(pmod(d, 64) as int)))"
-        ).alias(f"_bm{k}")
-        for k in range(n_words)
-    ]
+    set; see OPTIMIZATION_r14.md).
+
+    Returns the ``(id_a, id_b)`` of ``pairs`` whose popcount is at most
+    ``max_pc`` (a column over ``pairs``)."""
+    n_bits = 64 * _BITMAP_WORDS
+    words = range(_BITMAP_WORDS)
+    sig = bm.toDF("_bid", "_dx").select(
+        "_bid",
+        *[
+            F.expr(
+                f"aggregate(filter(_dx, d -> pmod(d, {n_bits}) div 64 = {k}), 0L, "
+                f"(acc, d) -> acc | shiftleft(1L, cast(pmod(d, 64) as int)))"
+            ).alias(f"_bm{k}")
+            for k in words
+        ],
+    )
+    ba = sig.select(F.col("_bid").alias("id_a"), *[F.col(f"_bm{k}").alias(f"_ba{k}") for k in words])
+    bb = sig.select(F.col("_bid").alias("id_b"), *[F.col(f"_bm{k}").alias(f"_bb{k}") for k in words])
+    op = {"jaccard": "_ba{k} ^ _bb{k}", "containment": "_ba{k} & ~_bb{k}"}[mode]
+    pc = sum(F.bit_count(F.expr(op.format(k=k))) for k in words)
+    return pairs.join(ba, "id_a").join(bb, "id_b").filter(pc.cast("double") <= max_pc).select("id_a", "id_b")
 
 
 def jaccard_pairs_prefix_filter(
@@ -717,20 +732,14 @@ def jaccard_pairs_prefix_filter(
     # locality that uniform 60-bit digests do not have — while the bitmap
     # kills 98.8% (exactly the true pair set) for 8 bytes x 4 per doc.
     t_eff = threshold - 1e-4
-    bm = shingled.select(F.col(id_col).alias("_bid"), digests.alias("_dx")).select(
-        "_bid", *_digest_bitmaps(F.col("_dx"))
-    )
-    ba = bm.select(F.col("_bid").alias("id_a"), *[F.col(f"_bm{k}").alias(f"_ba{k}") for k in range(4)])
-    bb = bm.select(F.col("_bid").alias("id_b"), *[F.col(f"_bm{k}").alias(f"_bb{k}") for k in range(4)])
-    xor_pc = sum(F.bit_count(F.expr(f"_ba{k} ^ _bb{k}")) for k in range(4))
     max_delta = (F.col("_sza") + F.col("_szb")).cast("double") * F.lit(
         (1.0 - t_eff) / (1.0 + t_eff)
     )
-    cand = (
-        cand_stats.join(ba, "id_a")
-        .join(bb, "id_b")
-        .filter(xor_pc.cast("double") <= max_delta + eps)
-        .select("id_a", "id_b")
+    cand = _bitmap_prune(
+        cand_stats,
+        shingled.select(id_col, digests),
+        "jaccard",
+        max_delta + eps,
     )
     # Digest-space pre-verification (round-13 optimization, guide §1.2
     # step 2 — make the per-task work cheap): the surviving candidate set
@@ -996,20 +1005,11 @@ def containment_pairs_prefix_filter(
     # any width (collisions only under-prune); the unrounded comparison
     # below is untouched, so the output set is still decided by the digest
     # containment and re-asserted on the true shingle arrays.
-    bm = shingled.select(F.col(id_col).alias("_bid"), digests.alias("_dx")).select(
-        "_bid", *_digest_bitmaps(F.col("_dx"))
-    )
-    ba = bm.select(F.col("_bid").alias("id_a"), *[F.col(f"_bm{k}").alias(f"_ba{k}") for k in range(4)])
-    bb = bm.select(F.col("_bid").alias("id_b"), *[F.col(f"_bm{k}").alias(f"_bb{k}") for k in range(4)])
-    miss_pc = sum(F.bit_count(F.expr(f"_ba{k} & ~_bb{k}")) for k in range(4))
-    cand = (
-        cand.join(ba, "id_a")
-        .join(bb, "id_b")
-        .filter(
-            miss_pc.cast("double")
-            <= (F.lit(1.0) - F.lit(threshold)) * F.col("sz_a").cast("double") + eps
-        )
-        .select("id_a", "id_b")
+    cand = _bitmap_prune(
+        cand,
+        shingled.select(id_col, digests),
+        "containment",
+        (F.lit(1.0) - F.lit(threshold)) * F.col("sz_a").cast("double") + eps,
     )
     # Digest-space pre-verification (the q75 round-13 retune): intersect
     # the 8-byte digest arrays for the full candidate set and apply the

@@ -7,8 +7,10 @@ then pays open/footer/seek costs per file and the driver pays listing time.
 The fix is periodic compaction — rewrite each over-fragmented table (or
 partition) into files near a target size, atomically.
 
-These operators mirror the discipline of the warehouse sink: write to a
-staging dir, swap via rename, never leave readers a half-written table.
+The rewrite is committed like every persisted directory, through
+``sinks/commit.py::replace_dir``: readers never see a half-written table,
+and a crash mid-swap is healed by the next commit.
+
 Sizing comes from the real file listing (not row-count guesses), so the
 rewrite's task count is right at any scale. The rewrite itself is one
 ``repartition(n)`` — a single shuffle whose output IS the new layout, the
@@ -18,11 +20,11 @@ pay-once trade every table format's OPTIMIZE command makes.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from universal_aws_data_pipeline_spark.sinks.commit import read_meta, replace_dir
 
 _DATA_SUFFIXES = (".parquet", ".orc", ".json", ".csv")
 
@@ -98,7 +100,8 @@ def compact_table(
     rewrite shuffles on the partition columns with ``n_target`` tasks, so
     each output dir is written by the few tasks owning its keys (the same
     anti-small-file move as ``write_partitioned``). Readers never see a
-    partial table: staging dir + rename swap, rollback on failure.
+    partial table: ``replace_dir`` commits the rewrite, carrying over the
+    table's ``_meta.json`` (a streaming table's batch id) unchanged.
 
     Returns the plan dict (with ``skipped: True`` when the table is already
     compact — idempotent, safe to run on a schedule).
@@ -109,7 +112,6 @@ def compact_table(
 
     df = spark.read.format(fmt).load(path)
     n = plan["target_files"]
-    staging = f"{path.rstrip('/')}.__compact__.{uuid.uuid4().hex[:8]}"
     if partition_by:
         writer = (
             df.repartition(n, *[F.col(c) for c in partition_by])
@@ -119,15 +121,5 @@ def compact_table(
         )
     else:
         writer = df.repartition(n).write.format(fmt).mode("overwrite")
-    writer.save(staging)
-
-    target = path.rstrip("/")
-    old = f"{target}.__old__.{uuid.uuid4().hex[:8]}"
-    os.rename(target, old)
-    try:
-        os.rename(staging, target)
-    except OSError:
-        os.rename(old, target)  # roll back — old data intact
-        raise
-    shutil.rmtree(old, ignore_errors=True)
+    replace_dir(path, writer.save, read_meta(path) or {})
     return {**plan, "skipped": False}

@@ -102,25 +102,26 @@ def scd2_stream_fn(
     ``scd2_apply`` — the streaming twin of the batch merge (q51), turning a
     CDC/update stream into a continuously-correct history table.
 
-    Exactly-once: each batch writes to ``<dim_path>__v<batch_id>`` then
-    atomically renames over the live path (the same staging-swap discipline
-    as the warehouse sink), and a marker dir under ``<dim_path>__applied``
-    skips replayed batch ids, so foreachBatch's at-least-once delivery
-    cannot double-close a version row. The dimension is read fresh per
-    batch — state lives in parquet, not executor memory, so the query
-    survives restarts with no state-store coupling.
+    Exactly-once: the merged dimension is committed through
+    ``sinks/commit.py::replace_dir`` with the batch id in its
+    ``_meta.json`` — the same recover / replay-check / commit discipline as
+    the streaming state in ``operators/statestore.py``. A replayed batch id
+    at or below the committed one is skipped, so foreachBatch's
+    at-least-once delivery cannot double-close a version row, and a crash
+    mid-swap is healed by the next batch's ``recover``. The dimension is
+    read fresh per batch — state lives in parquet, not executor memory, so
+    the query survives restarts with no state-store coupling.
 
     Within one batch, at most ONE update row per key may be applied (the
     batch is pre-collapsed to the LATEST update per key by effective date —
     intermediate same-batch versions are not materialized, matching the
     one-close-one-open shape of scd2_apply).
     """
-    import os
-    import shutil
+    from universal_aws_data_pipeline_spark.sinks.commit import read_meta, recover, replace_dir
 
     def fn(updates: DataFrame, batch_id: int) -> None:
-        marker = f"{dim_path}__applied/batch_{batch_id}"
-        if os.path.exists(marker):
+        recover(dim_path)
+        if batch_id <= (read_meta(dim_path) or {}).get("last_batch_id", -1):
             return
         spark = updates.sparkSession
         # latest update per key wins within the micro-batch
@@ -133,13 +134,7 @@ def scd2_stream_fn(
         )
         dim = spark.read.parquet(dim_path)
         merged = scd2_apply(dim, latest, key, tracked, effective, **scd_kwargs)
-        staging = f"{dim_path}__v{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        old = f"{dim_path}__old{batch_id}"
-        os.rename(dim_path, old)
-        os.rename(staging, dim_path)
-        shutil.rmtree(old, ignore_errors=True)
-        os.makedirs(marker, exist_ok=True)
+        replace_dir(dim_path, merged.write.mode("overwrite").parquet, {"last_batch_id": batch_id})
 
     return fn
 

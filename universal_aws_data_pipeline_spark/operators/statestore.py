@@ -1,68 +1,36 @@
-"""Crash-safe commit protocol for small foreachBatch state tables.
+"""Crash-safe commit of small foreachBatch state tables.
 
 The streaming sketch maintainers (theta, CMS, and friends) persist their
 bounded state as a parquet directory that is atomically replaced every
-micro-batch. The naive two-rename swap
-
-    os.rename(table, old); os.rename(staging, table)
-
-has two crash holes:
-
-1. A crash BETWEEN the renames leaves ``table`` missing — the next batch
-   silently rebuilds state from scratch (data loss, no error).
-2. A replay marker created AFTER the swap means a crash in that window
-   re-folds the batch on replay — double-counting for sum-merged state
-   (CMS cells).
-
-This module closes both with one idea: **the folded batch id travels
-inside the staged table itself** (``_meta.json``, written only after the
-parquet write succeeds, so its presence == "staging is complete"). The
-directory swap is then the single commit point — state and replay marker
-become visible atomically, and recovery can always tell a complete
-staging from a partial one.
+micro-batch through ``sinks/commit.py::replace_dir``. **The folded batch id
+travels inside the staged table itself** (``_meta.json``, the commit's
+completeness sentinel), so state and replay marker become visible in the
+same swap, and ``recover`` can always tell a complete staging from a
+partial one. That closes both holes of a bare two-rename swap: a crash
+between the renames no longer loses the table (the complete staging is
+promoted), and a crash after the swap can no longer re-fold the batch on
+replay (the marker was committed with it).
 
 Protocol per batch:
 
     recover(table)                      # heal any interrupted prior swap
     if batch_id <= last_folded(table):  # replay — already committed
         return
-    <write merged parquet to staging>
-    <write staging/_meta.json>          # completeness sentinel + batch id
-    swap(staging, table)                # rename table->old, staging->table
+    commit(merged, table, batch_id)     # replace_dir with the batch id
 
-Recovery cases (``recover``):
-- ``table`` present: prior commit finished; clean stray staging/old dirs.
-- ``table`` missing, a COMPLETE staging exists (has ``_meta.json``): the
-  crash hit between the two renames — promote the staging (it already
-  contains the crashed batch's fold; a foreachBatch replay of that batch
-  is then skipped by the meta check).
-- ``table`` missing, only an ``__old__`` dir: roll back to the old state.
-- ``table`` missing, only partial stagings: first ever batch crashed
-  mid-write — nothing to restore, clean up.
-
-Spark's parquet reader ignores ``_``-prefixed files, so ``_meta.json``
-rides inside the table directory without affecting reads.
-
-Local-filesystem ``os.rename`` is atomic; on object stores the same seam
-is served by the manifest-commit protocol in ``sinks/tables.py`` (see
-``write_table_manifest_commit``). This helper is for driver-local
-checkpoint-adjacent state, which Structured Streaming already requires to
-be on a real filesystem.
+This module adds only the replay position and the migration of the first
+maintainer generation's ``_batch_N`` sibling marker dirs. The commit itself
+needs a real filesystem, which Structured Streaming already requires for
+checkpoint-adjacent state.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
-import uuid
 
-_META = "_meta.json"
-
-
-def _is_complete(staging_dir: str) -> bool:
-    return os.path.exists(os.path.join(staging_dir, _META))
+from universal_aws_data_pipeline_spark.sinks import commit as dircommit
 
 
 def _legacy_marker_dirs(table: str) -> list[str]:
@@ -96,39 +64,19 @@ def _legacy_last_folded(table: str) -> int:
 
 
 def recover(table: str) -> None:
-    """Heal an interrupted swap so ``table`` reflects the last durable
-    commit, then remove every stray staging/old directory.
-
-    Also migrates a pre-protocol table in place: when ``table`` exists but
-    has no ``_meta.json`` and legacy ``_batch_N`` sibling markers are
-    present, their max batch id is written into the table's own meta. The
-    markers are *parent*-scoped and may be shared by a sibling table (e.g.
-    one state_path hosting both ``cells`` and ``bins``), so the migration
-    makes this table self-describing without touching the markers —
-    :func:`commit` only deletes them once no meta-less sibling could still
-    need them (round-6 ADVICE)."""
-    stagings = glob.glob(f"{table}.__staging__.*")
-    olds = glob.glob(f"{table}.__old__.*")
-    if not os.path.exists(table):
-        complete = [s for s in stagings if _is_complete(s)]
-        if complete:
-            # crash between the two renames: staging holds old ∪ batch and
-            # its meta carries the batch id, so promoting it both restores
-            # state and marks the batch folded
-            winner = max(complete, key=os.path.getmtime)
-            os.rename(winner, table)
-            stagings.remove(winner)
-        elif olds:
-            winner = max(olds, key=os.path.getmtime)
-            os.rename(winner, table)
-            olds.remove(winner)
-    for d in stagings + olds:
-        shutil.rmtree(d, ignore_errors=True)
-    if os.path.exists(table) and not _is_complete(table):
+    """``sinks/commit.py::recover``, then migrate a pre-protocol table in
+    place: when ``table`` exists but has no ``_meta.json`` and legacy
+    ``_batch_N`` sibling markers are present, their max batch id is written
+    into the table's own meta. The markers are *parent*-scoped and may be
+    shared by a sibling table (e.g. one state_path hosting both ``cells``
+    and ``bins``), so the migration makes this table self-describing
+    without touching the markers — :func:`commit` only deletes them once no
+    meta-less sibling could still need them."""
+    dircommit.recover(table)
+    if os.path.exists(table) and not dircommit._is_complete(table):
         legacy = _legacy_last_folded(table)
         if legacy >= 0:
-            with open(os.path.join(table, _META), "w", encoding="utf-8") as f:
-                json.dump({"last_batch_id": legacy}, f)
+            dircommit._write_json(os.path.join(table, dircommit._META), {"last_batch_id": legacy})
 
 
 def _has_meta_less_sibling(table: str) -> bool:
@@ -144,7 +92,7 @@ def _has_meta_less_sibling(table: str) -> bool:
         if ".__staging__." in name or ".__old__." in name:
             continue
         path = os.path.join(parent, name)
-        if os.path.isdir(path) and not _is_complete(path):
+        if os.path.isdir(path) and not dircommit._is_complete(path):
             return True
     return False
 
@@ -153,33 +101,21 @@ def last_folded(table: str) -> int:
     """Batch id recorded in the table's meta; for a pre-protocol table
     (no ``_meta.json``) falls back to the legacy ``_batch_N`` sibling
     marker dirs; -1 for fresh state."""
-    path = os.path.join(table, _META)
-    if not os.path.exists(path):
+    meta = dircommit.read_meta(table)
+    if meta is None:
         return _legacy_last_folded(table)
-    with open(path, encoding="utf-8") as f:
-        return int(json.load(f)["last_batch_id"])
+    return int(meta["last_batch_id"])
 
 
 def commit(merged, table: str, batch_id: int) -> None:
     """Write ``merged`` (a DataFrame) as the new state of ``table`` with
-    the batch id embedded, via complete-staging + swap. Callers must have
-    run :func:`recover` and the :func:`last_folded` replay check first."""
-    staging = f"{table}.__staging__.{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    # sentinel LAST: meta present == staging complete (and replayable-safe)
-    with open(os.path.join(staging, _META), "w", encoding="utf-8") as f:
-        json.dump({"last_batch_id": batch_id}, f)
-    old = f"{table}.__old__.{uuid.uuid4().hex[:8]}"
-    if os.path.exists(table):
-        os.rename(table, old)
-        os.rename(staging, table)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(staging, table)
+    the batch id embedded. Callers must have run :func:`recover` and the
+    :func:`last_folded` replay check first."""
+    dircommit.replace_dir(table, merged.write.mode("overwrite").parquet, {"last_batch_id": batch_id})
     # first new-protocol commit supersedes any legacy sibling markers — but
     # they are parent-scoped and another meta-less table under the same
-    # parent may still be reading them (round-6 ADVICE), so drop them only
-    # once every sibling table is self-describing
+    # parent may still be reading them, so drop them only once every
+    # sibling table is self-describing
     if not _has_meta_less_sibling(table):
         for d in _legacy_marker_dirs(table):
             shutil.rmtree(d, ignore_errors=True)

@@ -36,7 +36,6 @@ from universal_aws_data_pipeline_spark.plans._shared import (  # noqa: F401
     _hex_int_sql,
     _mh_sql,
     _ntz,
-    _parquet_ready,
     _t,
 )
 

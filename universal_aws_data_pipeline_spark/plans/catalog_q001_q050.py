@@ -21,7 +21,7 @@ from universal_aws_data_pipeline_spark.plans._shared import (
     register,
     _t,
     _artifact_dir,
-    _parquet_ready,
+    _q15_corpus,
     _ntz,
     _LANG_MARKER_SQL,
     _NORM_SQL,
@@ -523,29 +523,13 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     No cross-join at any scale; candidate cardinality is bounded by bucket
     sizes, and AQE splits skewed (boilerplate) buckets.
 
-    The (id, shingles) table is checkpointed to a parquet artifact shared
-    across calls (the corpus-index shape): the first call pays the text pass
-    exactly once (written, not lazily persisted — so the cold run doesn't
-    race the persist against three consumers), and every later call starts
-    from the stored shingles."""
-    import os
+    The (id, shingles) table is a build-once artifact shared across calls
+    (the corpus-index shape, ``_shared.py::_q15_corpus``): the first call
+    pays the text pass exactly once, and every later call starts from the
+    stored shingles."""
+    from universal_aws_data_pipeline_spark.operators.dedup import neardup_pairs_jaccard
 
-    from universal_aws_data_pipeline_spark.operators.dedup import (
-        neardup_pairs_jaccard,
-        parallelize_text_scan,
-        shingle_index_table,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    mutated = d.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.regexp_replace("text", r"\s+\S+$", "").alias("text"),
-    )
-    corpus = d.unionByName(mutated)
-    sh_path = os.path.join(_artifact_dir("shingles", sf_dir), "q15")
-    if not _parquet_ready(sh_path):
-        shingle_index_table(parallelize_text_scan(corpus), "doc_id", "text", 3).write.mode("overwrite").parquet(sh_path)
-    shingled = spark.read.parquet(sh_path)
+    corpus, shingled = _q15_corpus(spark, sf_dir)
     return neardup_pairs_jaccard(
         corpus, threshold=0.5, num_hashes=8, bands=2, shingle_n=3, shingled=shingled
     )

@@ -17,8 +17,9 @@ from universal_aws_data_pipeline_spark.plans._shared import (
     QUERIES,
     register,
     _t,
+    _artifact,
     _artifact_dir,
-    _parquet_ready,
+    _q15_corpus,
     _ntz,
     _NORM_SQL,
     _Q15_ORACLE,
@@ -267,19 +268,19 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile): the closure now runs at build, the warm plan scans
     (id, component) and rolls up sizes. Cold pays mining + closure +
     write."""
-    import os
-
     from universal_aws_data_pipeline_spark.operators.similarity import cosine_pairs_blocked
     from universal_aws_data_pipeline_spark.plans._shared import _cc_label_artifact
 
     def _edges() -> DataFrame:
-        pairs_path = os.path.join(_artifact_dir("semantic_pairs", sf_dir), "q56")
-        if not _parquet_ready(pairs_path):
-            e = _t(spark, sf_dir, "embeddings")
-            cosine_pairs_blocked(e, block_col="label", threshold=0.3, id_col="vec_id").write.mode(
-                "overwrite"
-            ).parquet(pairs_path)
-        return spark.read.parquet(pairs_path)
+        return _artifact(
+            spark,
+            "semantic_pairs",
+            sf_dir,
+            "q56",
+            lambda: cosine_pairs_blocked(
+                _t(spark, sf_dir, "embeddings"), block_col="label", threshold=0.3, id_col="vec_id"
+            ),
+        )
 
     comp = _cc_label_artifact(spark, "semantic_clusters", sf_dir, _edges)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
@@ -1165,24 +1166,9 @@ def q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pruning provably lost nothing. The engine never runs the N^2 join
     the oracle runs; it equi-joins on rarest-prefix shingles
     (operators/dedup.py::jaccard_pairs_prefix_filter)."""
-    import os
+    from universal_aws_data_pipeline_spark.operators.dedup import jaccard_pairs_prefix_filter
 
-    from universal_aws_data_pipeline_spark.operators.dedup import (
-        jaccard_pairs_prefix_filter,
-        parallelize_text_scan,
-        shingle_index_table,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    mutated = d.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.regexp_replace("text", r"\s+\S+$", "").alias("text"),
-    )
-    corpus = d.unionByName(mutated)
-    sh_path = os.path.join(_artifact_dir("shingles", sf_dir), "q15")
-    if not _parquet_ready(sh_path):
-        shingle_index_table(parallelize_text_scan(corpus), "doc_id", "text", 3).write.mode("overwrite").parquet(sh_path)
-    shingled = spark.read.parquet(sh_path)
+    corpus, shingled = _q15_corpus(spark, sf_dir)
     return jaccard_pairs_prefix_filter(corpus, threshold=0.5, shingle_n=3, shingled=shingled)
 
 

@@ -15,9 +15,9 @@ from universal_aws_data_pipeline_spark.plans._shared import (
     QUERIES,
     register,
     _t,
+    _artifact,
     _artifact_dir,
     _MAX_DRIVER_QUERIES,
-    _parquet_ready,
     _NORM_SQL,
     _Q15_ORACLE,
     _cos_sql,
@@ -488,8 +488,6 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     container — that's the point); positional + length prunes before exact
     verification. Oracle is brute-force all ordered pairs.
     See operators/dedup.py::containment_pairs_prefix_filter."""
-    import os
-
     from universal_aws_data_pipeline_spark.operators.dedup import (
         containment_pairs_prefix_filter,
         parallelize_text_scan,
@@ -499,10 +497,13 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # build-once shingle+digest artifact (documents-only corpus — q15/q75's
     # cache covers documents ∪ mutated, a different pair universe)
-    sh_path = os.path.join(_artifact_dir("shingles", sf_dir), "q110")
-    if not _parquet_ready(sh_path):
-        shingle_index_table(parallelize_text_scan(d), "doc_id", "text", 3).write.mode("overwrite").parquet(sh_path)
-    shingled = spark.read.parquet(sh_path)
+    shingled = _artifact(
+        spark,
+        "shingles",
+        sf_dir,
+        "q110",
+        lambda: shingle_index_table(parallelize_text_scan(d), "doc_id", "text", 3),
+    )
     return containment_pairs_prefix_filter(d, threshold=0.8, shingle_n=3, shingled=shingled)
 
 

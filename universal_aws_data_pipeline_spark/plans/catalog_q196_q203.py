@@ -19,13 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from universal_aws_data_pipeline_spark.plans._shared import (
-    QUERIES,
     _NORM_SQL,
     _Q15_ORACLE,
-    _artifact_dir,
     _copurchase_edges,
+    _neardup_pairs,
     _hex_int_sql,
-    _parquet_ready,
     _t,
     register,
 )
@@ -457,14 +455,7 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which source pairs share near-duplicate content?
     q15 pairs × documents source attribution."""
-    import os
-
-    pairs_path = os.path.join(_artifact_dir("neardup_pairs", sf_dir), "q43")
-    if not _parquet_ready(pairs_path):
-        QUERIES["q15_neardup_minhash_lsh"].fn(spark, sf_dir).write.mode(
-            "overwrite"
-        ).parquet(pairs_path)
-    pairs = spark.read.parquet(pairs_path).select("id_a", "id_b")
+    pairs = _neardup_pairs(spark, sf_dir).select("id_a", "id_b")
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     j = (
         pairs.join(d.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa")), "id_a")

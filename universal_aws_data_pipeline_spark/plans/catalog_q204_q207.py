@@ -14,11 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from universal_aws_data_pipeline_spark.plans._shared import (
-    QUERIES,
     _NORM_SQL,
     _Q15_ORACLE,
-    _artifact_dir,
-    _parquet_ready,
+    _neardup_pairs,
     _t,
     register,
 )
@@ -108,14 +106,7 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q205(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Where does the near-duplicate similarity mass sit?
     q15 pair artifact → 10-bin integer histogram."""
-    import os
-
-    pairs_path = os.path.join(_artifact_dir("neardup_pairs", sf_dir), "q43")
-    if not _parquet_ready(pairs_path):
-        QUERIES["q15_neardup_minhash_lsh"].fn(spark, sf_dir).write.mode(
-            "overwrite"
-        ).parquet(pairs_path)
-    pairs = spark.read.parquet(pairs_path)
+    pairs = _neardup_pairs(spark, sf_dir)
     return (
         pairs.select(F.round(F.col("jaccard") * 10000).cast("long").alias("jm"))
         .select(

@@ -27,8 +27,7 @@ from universal_aws_data_pipeline_spark.operators.tokenizer import (
 )
 from universal_aws_data_pipeline_spark.plans._shared import (
     _NORM_SQL,
-    _artifact_dir,
-    _parquet_ready,
+    _artifact,
     _t,
     register,
 )
@@ -263,23 +262,18 @@ def _uni_ctes(rounds: int, keep_multi: int) -> list[str]:
 
 def _uni_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dataset's trained-once unigram model (piece, cnt, cost) — the
-    q226 `_learned_merges` convention: `_SUCCESS` gates reuse, overwrite
-    clears partials, the cache is keyed by dataset path. The model is a
+    q226 `_learned_merges` convention, an ``_artifact``. The model is a
     DataFrame, NOT a driver-side list: its consumers JOIN it (the Viterbi
     candidate pricing), so nothing here ever collects."""
-    import os
-
     from universal_aws_data_pipeline_spark.operators.tokenizer import unigram_train
 
-    path = os.path.join(
-        _artifact_dir("unigram_model", sf_dir), f"r{_UNI_ROUNDS}k{_UNI_KEEP}"
+    return _artifact(
+        spark,
+        "unigram_model",
+        sf_dir,
+        f"r{_UNI_ROUNDS}k{_UNI_KEEP}",
+        lambda: unigram_train(_t(spark, sf_dir, "documents"), rounds=_UNI_ROUNDS, keep_multi=_UNI_KEEP),
     )
-    if not _parquet_ready(path):
-        d = _t(spark, sf_dir, "documents")
-        unigram_train(d, rounds=_UNI_ROUNDS, keep_multi=_UNI_KEEP).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return spark.read.parquet(path)
 
 
 _Q229_ORACLE = (

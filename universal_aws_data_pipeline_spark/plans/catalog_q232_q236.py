@@ -26,9 +26,8 @@ from pyspark.sql import functions as F
 
 from universal_aws_data_pipeline_spark.plans._shared import (
     _NORM_SQL,
-    _artifact_dir,
+    _artifact,
     _hex_int_sql,
-    _parquet_ready,
     _t,
     register,
 )
@@ -115,25 +114,25 @@ def _lp_ctes(rounds: int) -> list[str]:
 
 def _lp_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dataset's trained-once classifier model (bucket, w_micro) — the
-    q226 `_learned_merges` convention: `_SUCCESS` gates reuse, overwrite
-    clears partials, the cache is keyed by dataset path. The model is a
+    q226 `_learned_merges` convention, an ``_artifact``. The model is a
     64-row DataFrame its consumers broadcast-join, never a driver list."""
-    import os
-
     from universal_aws_data_pipeline_spark.operators.classifier import (
         linear_probe_train,
     )
 
-    path = os.path.join(
-        _artifact_dir("quality_classifier", sf_dir),
+    return _artifact(
+        spark,
+        "quality_classifier",
+        sf_dir,
         f"r{_LP_ROUNDS}b{_LP_BUCKETS}lr{_LP_LR}",
+        lambda: linear_probe_train(
+            _t(spark, sf_dir, "documents"),
+            F.col("lang") == "en",
+            rounds=_LP_ROUNDS,
+            buckets=_LP_BUCKETS,
+            lr=_LP_LR,
+        ),
     )
-    if not _parquet_ready(path):
-        d = _t(spark, sf_dir, "documents")
-        linear_probe_train(
-            d, F.col("lang") == "en", rounds=_LP_ROUNDS, buckets=_LP_BUCKETS, lr=_LP_LR
-        ).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 _Q232_ORACLE = (

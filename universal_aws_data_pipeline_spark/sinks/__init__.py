@@ -1,6 +1,5 @@
 from universal_aws_data_pipeline_spark.sinks.tables import (  # noqa: F401
     TolerantLoadError,
-    compact_table,
     unload_table,
     write_partitioned,
     write_warehouse_table,

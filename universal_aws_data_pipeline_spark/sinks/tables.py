@@ -9,32 +9,27 @@ Parity targets:
   DISTKEY/SORTKEY layout (``:80-84``), tolerates up to MAXERROR bad records
   (``:132``), and optionally VACUUM/ANALYZEs (``:167-172``). Spark-native
   equivalents:
-    * staging swap  → write to ``<table>.__staging__``, then atomic directory
-      rename (atomic on POSIX/HDFS; on S3 you'd use a table format — the
-      interface is Delta/Iceberg-ready, see ``TableFormatNote`` below)
+    * staging swap  → ``sinks/commit.py``: ``replace_dir`` (staging dir +
+      rename swap, atomic on POSIX/HDFS, crash-recoverable) by default, or
+      ``commit_version`` with ``dest.commit = "manifest"`` (immutable
+      version dirs + one small ``_manifest.json`` replace — atomic on S3
+      too; ``write_table_manifest_commit`` / ``read_manifest_table``)
     * DISTKEY       → ``repartition(distkey)`` so co-located joins on the key
       skip a shuffle downstream
     * SORTKEY       → ``sortWithinPartitions`` so parquet row-group min/max
       stats enable data skipping on sortkey predicates
     * MAXERROR      → PERMISSIVE read + corrupt-record side channel, cap
       enforced by an ``observe`` metric (no extra count scan)
-    * VACUUM/ANALYZE → compaction rewrite (coalesce to target file size) +
-      ``ANALYZE TABLE ... COMPUTE STATISTICS`` when a catalog table exists.
+    * VACUUM        → ``operators/maintenance.py::compact_table``.
 
-TableFormatNote: the directory-rename swap is atomic on POSIX/HDFS only. For
-object stores this module now ships a manifest-commit protocol
-(``write_table_manifest_commit`` / ``read_manifest_table``, or
-``dest.commit = "manifest"``): data lands in immutable version dirs and the
-commit is one small-object ``_manifest.json`` overwrite — atomic on S3 too.
-That is the same idea Delta/Iceberg industrialize; the function signatures
-take (df, path, layout) only, so upgrading the commit protocol to a full
-table format changes no call sites.
+The function signatures take (df, path, layout) only, so upgrading the
+commit protocol to a full table format (Delta/Iceberg) changes no call
+sites.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame
@@ -42,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 from universal_aws_data_pipeline_spark.config.model import DestinationConfig
+from universal_aws_data_pipeline_spark.sinks.commit import _read_manifest, commit_version, replace_dir
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -91,67 +87,20 @@ def _observe_and_layout(df: DataFrame, dest: DestinationConfig) -> tuple[DataFra
     return observed, obs, has_corrupt
 
 
-# ---------------------------------------------------------------------------
-# Manifest-commit protocol: object-store-atomic table swap.
-#
-# Directory renames are atomic on POSIX/HDFS but NOT on S3-style object
-# stores (a "rename" is copy+delete per object — a crash mid-swap leaves a
-# torn table). The standard fix (what Delta/Iceberg do at full scale) is to
-# never move data at all: each load writes a fresh immutable VERSION
-# directory, and a single tiny pointer object — ``_manifest.json`` — is
-# (over)written LAST naming the current version. Readers resolve through the
-# manifest. The commit is therefore one small-object PUT: atomic on local FS
-# (write-temp + os.replace) and atomic on S3 (single-key PUT with
-# read-after-write consistency). A crash anywhere before the manifest lands
-# leaves the old version both current and fully readable; orphan version
-# dirs are garbage-collected by the NEXT successful commit, never by readers.
-# ---------------------------------------------------------------------------
-
-_MANIFEST = "_manifest.json"
+def _writer(df: DataFrame, fmt: str, partition_by: list[str] | None):
+    writer = df.write.format(fmt).mode("overwrite")
+    return writer.partitionBy(*partition_by) if partition_by else writer
 
 
-def _read_manifest(root: str) -> dict | None:
-    import json
-
-    p = os.path.join(root, _MANIFEST)
-    if not os.path.exists(p):
-        return None
-    with open(p, encoding="utf-8") as fh:
-        return json.load(fh)
-
-
-def _commit_manifest(
-    path: str,
-    prev: dict | None,
-    vdir: str,
-    fmt: str,
-    partition_by: list[str] | None,
-    keep_versions: int,
-) -> dict:
-    """The commit point: one small-object replace (PUT on an object store)
-    pointing the manifest at an already-written version dir, then GC of
-    versions outside the retained set — only AFTER the commit."""
-    import json
-
-    manifest = {
-        "version": (prev["version"] + 1) if prev else 0,
-        "current": vdir,
-        "format": fmt,
-        "partition_by": list(partition_by or []),
-        "previous": ([prev["current"]] + prev.get("previous", []))[: keep_versions - 1]
-        if prev
-        else [],
-    }
-    tmp = os.path.join(path, f"{_MANIFEST}.__new__.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-    live = {vdir, *manifest["previous"]}
-    for d in os.listdir(path):
-        if d.startswith("v_") and d not in live:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    return manifest
+def _checked_counts(obs: Observation, has_corrupt: bool, max_errors: int) -> dict[str, int]:
+    """(record_count, error_count) of a finished load job; raises
+    ``TolerantLoadError`` past the MAXERROR cap (handler.py:132), which every
+    caller checks BEFORE its swap so the old table stays current."""
+    got = obs.get
+    n_err = int(got.get("error_count", 0)) if has_corrupt else 0
+    if n_err > max_errors:
+        raise TolerantLoadError(f"{n_err} corrupt records > max_errors={max_errors}")
+    return {"record_count": int(got.get("record_count", 0)) - n_err, "error_count": n_err}
 
 
 def write_table_manifest_commit(
@@ -162,25 +111,8 @@ def write_table_manifest_commit(
     keep_versions: int = 2,
 ) -> dict:
     """Commit ``df`` as the new current version of the manifest table at
-    ``path``. Returns the new manifest dict. See the protocol note above.
-
-    The data lands directly in its version directory — never moved, never
-    double-written; the manifest pointer is the only thing that changes at
-    commit time. ``keep_versions`` bounds retained history (current + N-1
-    predecessors): the previous version always survives one commit, so a
-    reader that resolved the old manifest an instant before the swap still
-    finds its data files. Full time-travel retention is the Delta/Iceberg
-    upgrade — same layout, richer manifest.
-    """
-    os.makedirs(path, exist_ok=True)
-    prev = _read_manifest(path)
-    version = (prev["version"] + 1) if prev else 0
-    vdir = f"v_{version:06d}_{uuid.uuid4().hex[:8]}"
-    writer = df.write.format(fmt).mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(os.path.join(path, vdir))
-    return _commit_manifest(path, prev, vdir, fmt, partition_by, keep_versions)
+    ``path`` (``sinks/commit.py::commit_version``); returns the manifest."""
+    return commit_version(path, _writer(df, fmt, partition_by).save, fmt, partition_by, keep_versions)
 
 
 def read_manifest_table(spark, path: str) -> DataFrame:
@@ -189,7 +121,7 @@ def read_manifest_table(spark, path: str) -> DataFrame:
     directory is invisible until its manifest lands."""
     m = _read_manifest(path)
     if m is None:
-        raise FileNotFoundError(f"no {_MANIFEST} at {path!r} — not a manifest table")
+        raise FileNotFoundError(f"no _manifest.json at {path!r} — not a manifest table")
     return spark.read.format(m["format"]).load(os.path.join(path, m["current"]))
 
 
@@ -202,75 +134,31 @@ def write_warehouse_table(
 
     Returns the number of rows loaded (from an observe metric — a single job
     computes data + counts, unlike the reference's triple-action bug at
-    transform_data.py:234-238). With ``dest.jdbc_url`` set, the load goes
-    over a live JDBC connection (staging TABLE + rename swap) instead of
-    managed parquet — see ``write_warehouse_jdbc``. With ``dest.commit ==
-    "manifest"``, the swap is the object-store-atomic manifest protocol
-    above instead of a directory rename.
+    transform_data.py:234-238). The load is one write, committed by
+    ``sinks/commit.py``: ``replace_dir`` (staging dir + rename swap) by
+    default, ``commit_version`` (version dir + manifest replace) with
+    ``dest.commit == "manifest"``. MAXERROR is checked inside the write, so
+    a rejected load never moves the committed table. With ``dest.jdbc_url``
+    set, the load goes over a live JDBC connection instead — see
+    ``write_warehouse_jdbc``.
     """
     if dest.jdbc_url:
         return write_warehouse_jdbc(df, dest, record_count_out)
-    if dest.commit == "manifest":
-        observed, obs, has_corrupt = _observe_and_layout(df, dest)
-        path = dest.path.rstrip("/")
-        os.makedirs(path, exist_ok=True)
-        prev = _read_manifest(path)
-        version = (prev["version"] + 1) if prev else 0
-        vdir = f"v_{version:06d}_{uuid.uuid4().hex[:8]}"
-        # the data lands directly in its (invisible-until-committed) version
-        # dir — one write, no rename of data files, ever
-        writer = observed.write.format(dest.format).mode("overwrite")
-        if dest.partition_by:
-            writer = writer.partitionBy(*dest.partition_by)
-        writer.save(os.path.join(path, vdir))
-        got = obs.get
-        n_rows = int(got.get("record_count", 0))
-        n_err = int(got.get("error_count", 0)) if has_corrupt else 0
-        if n_err > dest.max_errors:
-            # MAXERROR gates BEFORE the commit: the manifest never moved, so
-            # the old table stays current and fully readable
-            shutil.rmtree(os.path.join(path, vdir), ignore_errors=True)
-            raise TolerantLoadError(
-                f"{n_err} corrupt records > max_errors={dest.max_errors}"
-            )
-        _commit_manifest(path, prev, vdir, dest.format, dest.partition_by, keep_versions=2)
-        if record_count_out is not None:
-            record_count_out["record_count"] = n_rows - n_err
-            record_count_out["error_count"] = n_err
-        return n_rows - n_err
     observed, obs, has_corrupt = _observe_and_layout(df, dest)
+    counts: dict[str, int] = {}
 
-    staging = f"{dest.path.rstrip('/')}.__staging__.{uuid.uuid4().hex[:8]}"
-    writer = observed.write.format(dest.format).mode("overwrite")
-    if dest.partition_by:
-        writer = writer.partitionBy(*dest.partition_by)
-    writer.save(staging)
+    def write(out: str) -> None:
+        _writer(observed, dest.format, dest.partition_by).save(out)
+        counts.update(_checked_counts(obs, has_corrupt, dest.max_errors))
 
-    got = obs.get
-    n_rows = int(got.get("record_count", 0))
-    n_err = int(got.get("error_count", 0)) if has_corrupt else 0
-    if n_err > dest.max_errors:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise TolerantLoadError(f"{n_err} corrupt records > max_errors={dest.max_errors}")
-
-    # atomic swap (redshift_loader/handler.py:153-165): rename staging into
-    # place; keep the old data until the rename succeeds, then drop it.
-    target = dest.path.rstrip("/")
-    old = f"{target}.__old__.{uuid.uuid4().hex[:8]}"
-    if os.path.exists(target):
-        os.rename(target, old)
-    try:
-        os.rename(staging, target)
-    except OSError:
-        if os.path.exists(old):
-            os.rename(old, target)  # roll back
-        raise
-    shutil.rmtree(old, ignore_errors=True)
-
+    path = dest.path.rstrip("/")
+    if dest.commit == "manifest":
+        commit_version(path, write, dest.format, dest.partition_by)
+    else:
+        replace_dir(path, write, {})
     if record_count_out is not None:
-        record_count_out["record_count"] = n_rows - n_err
-        record_count_out["error_count"] = n_err
-    return n_rows - n_err
+        record_count_out.update(counts)
+    return counts["record_count"]
 
 
 def write_warehouse_jdbc(
@@ -316,12 +204,11 @@ def write_warehouse_jdbc(
             _exec(f"DROP TABLE {staging}")
         observed.write.mode("overwrite").jdbc(dest.jdbc_url, staging, properties=props)
 
-        got = obs.get
-        n_rows = int(got.get("record_count", 0))
-        n_err = int(got.get("error_count", 0)) if has_corrupt else 0
-        if n_err > dest.max_errors:
+        try:
+            counts = _checked_counts(obs, has_corrupt, dest.max_errors)
+        except TolerantLoadError:
             _exec(f"DROP TABLE {staging}")
-            raise TolerantLoadError(f"{n_err} corrupt records > max_errors={dest.max_errors}")
+            raise
 
         # swap (redshift_loader/handler.py:153-165): target stays readable
         # until the instant of the rename; roll back if the swap-in fails.
@@ -342,9 +229,8 @@ def write_warehouse_jdbc(
         conn.close()
 
     if record_count_out is not None:
-        record_count_out["record_count"] = n_rows - n_err
-        record_count_out["error_count"] = n_err
-    return n_rows - n_err
+        record_count_out.update(counts)
+    return counts["record_count"]
 
 
 def unload_table(df: DataFrame, path: str, fmt: str = "parquet", partition_by: list[str] | None = None) -> None:
@@ -358,20 +244,3 @@ def unload_table(df: DataFrame, path: str, fmt: str = "parquet", partition_by: l
             *partition_by
         )
     writer.save(path)
-
-
-def compact_table(spark_df: DataFrame, path: str, target_file_mb: int = 256) -> None:
-    """VACUUM-style compaction (redshift_loader/handler.py:167-172): rewrite a
-    table directory coalescing small files toward ``target_file_mb``."""
-    import math
-
-    size_bytes = sum(
-        os.path.getsize(os.path.join(dp, f)) for dp, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-    )
-    n = max(1, math.ceil(size_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = f"{path.rstrip('/')}.__compact__.{uuid.uuid4().hex[:8]}"
-    spark_df.coalesce(n).write.mode("overwrite").parquet(tmp)
-    old = f"{path.rstrip('/')}.__old__.{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
