@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 
@@ -372,3 +373,85 @@ def test_reference_config_drives_full_pipeline_e2e(spark, tmp_path):
     # redshift sortkey -> file layout; partition dirs from the date heuristic
     years = {d for d in os.listdir(cfg.destination.path) if d.startswith("year=")}
     assert years == {"year=2025"}
+
+
+def test_stage_ms_times_each_stage_and_rides_the_notification(spark, customer_json, tmp_path):
+    events = []
+    cfg = _cfg(
+        customer_json, tmp_path,
+        destination={"path": str(tmp_path / "out")},
+        quality_checks=[{"type": "not_null", "columns": ["customer_id"]}],
+    )
+    result = PipelineRunner(spark, notify=events.append, clock=lambda: dt.datetime(2026, 1, 1)).run(cfg)
+    assert result.status == "success", result.error
+    assert list(result.stage_ms) == result.stages == ["ingest", "transform", "quality", "write"]
+    assert all(ms > 0 for ms in result.stage_ms.values())
+    assert events[-1]["stage_ms"] == result.stage_ms
+
+
+def _new_persistent_rdds(spark, before):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+
+
+def test_gated_load_checkpoint_released_on_every_outcome(spark, tmp_path):
+    """A run that both gates and loads reads the feed once, into a
+    localCheckpoint; success, a quality failure and a MAXERROR failure all
+    release it, and the failed gate leaves the committed table as it was."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    with open(raw / "part-0.json", "w") as f:
+        for i, name in ((1, "Ann"), (2, "Bob")):
+            f.write(json.dumps({"id": i, "profile": {"name": name, "city": "B"}, "balance": "1",
+                                "created": "2024-03-01"}) + "\n")
+        f.write("not json\n{broken\n")
+    dest = str(tmp_path / "wh")
+    runner = PipelineRunner(spark, clock=lambda: dt.datetime(2026, 1, 1))
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    ok = runner.run(_cfg(str(raw), tmp_path, destination={"path": dest, "max_errors": 5},
+                         quality_checks=[{"type": "unique", "columns": ["customer_id"]}]))
+    assert ok.status == "success", ok.error
+    assert (ok.record_count, ok.error_count) == (2, 2)
+    assert not _new_persistent_rdds(spark, before)
+    committed = sorted(r["customer_id"] for r in spark.read.parquet(dest).collect())
+    listing = sorted(os.listdir(dest))
+
+    gated = runner.run(_cfg(str(raw), tmp_path, destination={"path": dest, "max_errors": 5},
+                            quality_checks=[{"type": "regex", "columns": ["name"], "pattern": "^A"}]))
+    assert gated.status == "failed" and "quality checks failed" in gated.error
+    assert (gated.record_count, gated.error_count) == (-1, 0)
+    assert "write" not in gated.stages
+    assert not _new_persistent_rdds(spark, before)
+    assert sorted(os.listdir(dest)) == listing
+    assert sorted(r["customer_id"] for r in spark.read.parquet(dest).collect()) == committed
+
+    capped = runner.run(_cfg(str(raw), tmp_path, destination={"path": dest, "max_errors": 1},
+                             quality_checks=[{"type": "unique", "columns": ["customer_id"]}]))
+    assert capped.status == "failed" and "max_errors" in capped.error
+    assert not _new_persistent_rdds(spark, before)
+    assert sorted(os.listdir(dest)) == listing
+
+
+def test_write_retry_reads_the_lazy_plan(spark, customer_json, tmp_path, monkeypatch):
+    """The first write attempt reads the checkpoint; a retry reads the lazy
+    frame, so a lost checkpoint block cannot fail every attempt."""
+    import universal_aws_data_pipeline_spark.runner as runner_mod
+
+    seen = []
+    real = runner_mod.write_partitioned
+
+    def flaky(df, *args, **kwargs):
+        seen.append(df._jdf.queryExecution().analyzed().toString())
+        if len(seen) == 1:
+            raise OSError("transient")
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(runner_mod, "write_partitioned", flaky)
+    cfg = _cfg(customer_json, tmp_path, destination={"path": str(tmp_path / "out")},
+               quality_checks=[{"type": "not_null", "columns": ["customer_id"]}])
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    result = PipelineRunner(spark, clock=lambda: dt.datetime(2026, 1, 1), sleep=lambda s: None).run(cfg)
+    assert result.status == "success", result.error
+    assert result.record_count == 2
+    assert "LogicalRDD" in seen[0] and "LogicalRDD" not in seen[1]
+    assert not _new_persistent_rdds(spark, before)

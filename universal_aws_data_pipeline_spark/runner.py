@@ -10,20 +10,24 @@ Parity with ``src/config/pipelines/workflow_definition.json``:
 - catch → failure notification (``:82-93`` etc.) → ``notify`` callbacks with a
   structured envelope (⇔ the SNS JSON envelopes, ``api_ingestion/handler.py:
   367-378``, ``redshift_loader/handler.py:220-233``)
-- crawler schema discovery (``:94-142``) → schema inference at read + the
-  registry in ``register_schema`` (a catalog the next run can enforce)
+- crawler schema discovery (``:94-142``) → the runner infers the schema
+  from the feed on every run; ``config/registry.py::SchemaRegistry`` is the
+  catalog a caller can register it in and enforce on later reads
 - Glue transform job (``:155-185``) → ``transform_chain``
 - Redshift load (``:198-223``) → ``write_warehouse_table`` (staging swap)
 
 Observability: input/output record counts come from ``df.observe`` metrics in
 the same job as the write — the reference recomputes the plan per count and
 reads both counts after the write, so they're always equal and 3× the work
-(``transform_data.py:234-238``, SURVEY §1.4).
+(``transform_data.py:234-238``, SURVEY §1.4). ``RunResult.stage_ms`` holds
+the wall ms of each batch stage, also sent in the success notification.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import itertools
 import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -55,6 +59,7 @@ class RunResult:
     error_count: int = 0
     error: str | None = None
     quality: list[dict[str, Any]] = field(default_factory=list)
+    stage_ms: dict[str, float] = field(default_factory=dict)  # batch runs: wall ms per finished stage
 
 
 class PipelineError(RuntimeError):
@@ -91,10 +96,34 @@ def _check_thresholds(thresholds: list[MetricThreshold], metrics: dict[str, floa
         raise ValueError("metric alarms tripped: " + ", ".join(r.check for r in alarmed))
 
 
+@contextlib.contextmanager
+def _stage(result: RunResult, name: str):
+    """Time one stage with ``perf_counter``; a stage that raises is neither
+    timed nor listed."""
+    t = time.perf_counter()
+    yield
+    result.stage_ms[name] = (time.perf_counter() - t) * 1000.0
+    result.stages.append(name)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a ``localCheckpoint`` result: its plan is
+    the ``LogicalRDD`` over the checkpointed RDD."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 class PipelineRunner:
     """run(cfg) = ingest → transform → quality → write, with per-stage retry
-    and notification hooks. The whole run is ONE lazy Spark plan ending in one
-    write action (counts via observe), not a stage-per-materialization chain."""
+    and notification hooks. A file batch run launches these Spark jobs:
+
+    - ingest: schema inference over the feed (``read_source``);
+    - transform: with quality checks AND a destination, one job parses and
+      transforms the feed into a ``localCheckpoint`` that the gate and the
+      load both read, released when the run ends; otherwise nothing runs;
+    - quality: one aggregation job for all checks;
+    - write: the load, with record/error counts observed in the same job
+      (``transformed.count()`` when there is no destination).
+    """
 
     def __init__(
         self,
@@ -220,43 +249,51 @@ class PipelineRunner:
             return self._run_stream_to_completion(cfg)
         result = RunResult(source_name=cfg.name, status="failed")
         now = self.clock() if self.clock else None
+        staged: DataFrame | None = None
         try:
-            df = _with_retry("ingest", lambda: self._ingest(cfg), cfg.retry, self.sleep)
-            result.stages.append("ingest")
+            with _stage(result, "ingest"):
+                df = _with_retry("ingest", lambda: self._ingest(cfg), cfg.retry, self.sleep)
 
-            transformed = transform_chain(
-                df, cfg, processed_at=now,
-                fallback_date=now.date() if now else None,
-            )
-            if cfg.post_transforms:
-                from universal_aws_data_pipeline_spark.operators.post import apply_post_transforms
+            with _stage(result, "transform"):
+                transformed = transform_chain(
+                    df, cfg, processed_at=now,
+                    fallback_date=now.date() if now else None,
+                )
+                if cfg.post_transforms:
+                    from universal_aws_data_pipeline_spark.operators.post import apply_post_transforms
 
-                transformed = apply_post_transforms(transformed, cfg.post_transforms)
-            result.stages.append("transform")
+                    transformed = apply_post_transforms(transformed, cfg.post_transforms)
+                ready = transformed
+                if cfg.quality_checks and cfg.destination is not None:
+                    # the gate and the load would each parse and transform the feed
+                    staged = ready = transformed.localCheckpoint(eager=True)
 
             if cfg.quality_checks:
-                checked = enforce_quality_checks(transformed, cfg.quality_checks)
-                result.quality = [{"check": r.check, "passed": r.passed, "violations": r.violations} for r in checked]
-                result.stages.append("quality")
+                with _stage(result, "quality"):
+                    checked = enforce_quality_checks(ready, cfg.quality_checks)
+                    result.quality = [{"check": r.check, "passed": r.passed, "violations": r.violations}
+                                      for r in checked]
 
             if cfg.destination is not None:
                 dest = cfg.destination
-                if dest.jdbc_url or dest.dist_key or dest.sort_keys or dest.max_errors:
-                    counts: dict[str, int] = {}
-                    _with_retry("load", lambda: write_warehouse_table(transformed, dest, counts),
-                                cfg.retry, self.sleep)
-                    result.record_count = counts.get("record_count", -1)
-                    result.error_count = counts.get("error_count", 0)
-                else:
-                    obs = Observation(f"run_{cfg.name}")
-                    observed = transformed.observe(obs, F.count(F.lit(1)).alias("record_count"))
-                    _with_retry(
-                        "write",
-                        lambda: write_partitioned(observed, dest.path, dest.format, dest.partition_by, dest.mode),
-                        cfg.retry, self.sleep,
-                    )
-                    result.record_count = int(obs.get.get("record_count", -1))
-                result.stages.append("write")
+                # Only the first attempt reads the checkpoint, so a lost
+                # checkpoint block cannot fail every retry.
+                attempts = itertools.chain([ready], itertools.repeat(transformed))
+                with _stage(result, "write"):
+                    if dest.jdbc_url or dest.dist_key or dest.sort_keys or dest.max_errors:
+                        counts: dict[str, int] = {}
+                        _with_retry("load", lambda: write_warehouse_table(next(attempts), dest, counts),
+                                    cfg.retry, self.sleep)
+                        result.record_count = counts.get("record_count", -1)
+                        result.error_count = counts.get("error_count", 0)
+                    else:
+                        def write_once() -> int:
+                            obs = Observation(f"run_{cfg.name}")
+                            observed = next(attempts).observe(obs, F.count(F.lit(1)).alias("record_count"))
+                            write_partitioned(observed, dest.path, dest.format, dest.partition_by, dest.mode)
+                            return int(obs.get.get("record_count", -1))
+
+                        result.record_count = _with_retry("write", write_once, cfg.retry, self.sleep)
             else:
                 result.record_count = transformed.count()
 
@@ -264,7 +301,7 @@ class PipelineRunner:
                               {"record_count": result.record_count, "error_count": result.error_count})
             result.status = "success"
             self.notify({"status": "success", "source": cfg.name, "stages": result.stages,
-                         "record_count": result.record_count})
+                         "record_count": result.record_count, "stage_ms": result.stage_ms})
             return result
         except Exception as e:  # noqa: BLE001 — catch → notify (workflow :82-93)
             result.error = str(e)
@@ -272,3 +309,6 @@ class PipelineRunner:
                          "stage": getattr(e, "stage", result.stages[-1] if result.stages else "init"),
                          "error": str(e)})
             return result
+        finally:
+            if staged is not None:
+                _release_checkpoint(staged)
