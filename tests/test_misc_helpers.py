@@ -1,23 +1,10 @@
-"""Coverage for remaining helpers: load_tables view registration, metric
-threshold evaluation, corrupt-record column handling."""
+"""Coverage for remaining helpers: metric threshold evaluation,
+corrupt-record column handling."""
 
 from __future__ import annotations
 
 from universal_aws_data_pipeline_spark.config.model import MetricThreshold
 from universal_aws_data_pipeline_spark.operators.quality import check_metric_thresholds
-from universal_aws_data_pipeline_spark.sources.files import load_tables
-
-
-def test_load_tables_registers_views(spark, sf_dir):
-    tables = load_tables(spark, sf_dir, names=["region", "nation"])
-    assert set(tables) == {"region", "nation"}
-    # temp views queryable through the SQL door
-    n = spark.sql("SELECT count(*) AS n FROM region").collect()[0]["n"]
-    assert n == 5
-    joined = spark.sql(
-        "SELECT r.r_name, count(*) AS n FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name"
-    )
-    assert joined.count() == 5
 
 
 def test_check_metric_thresholds_alarm_when_true():

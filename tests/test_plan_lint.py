@@ -422,3 +422,38 @@ def test_directories_commit_only_through_the_commit_module():
             ):
                 offenders.append(f"{where}:{node.lineno} _SUCCESS")
     assert offenders == [], offenders
+
+
+def test_stream_maintainers_fold_only_through_fold_fn():
+    """Every foreachBatch state maintainer folds through
+    ``operators/statestore.py::fold_fn``, which owns recover → replay check
+    → read → commit. No ``*_stream_fn`` in the package may run any of those
+    steps itself: a hand-rolled replay guard, commit or overwrite of its
+    state fails here."""
+    import ast
+    import pathlib
+
+    import universal_aws_data_pipeline_spark as pkg_mod
+
+    banned = {"recover", "last_folded", "commit", "read_meta", "replace_dir"}
+
+    def offends(call: ast.Call) -> bool:
+        f = call.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        if name == "mode":
+            args = [*call.args, *(k.value for k in call.keywords)]
+            return any(isinstance(a, ast.Constant) and a.value == "overwrite" for a in args)
+        return name in banned
+
+    pkg = pathlib.Path(pkg_mod.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for fn in ast.walk(tree):
+            if (
+                isinstance(fn, ast.FunctionDef)
+                and fn.name.endswith("_stream_fn")
+                and any(isinstance(n, ast.Call) and offends(n) for n in ast.walk(fn))
+            ):
+                offenders.append(f"{path.relative_to(pkg)}::{fn.name}")
+    assert offenders == [], offenders

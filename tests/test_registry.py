@@ -16,7 +16,6 @@ from pyspark.sql.types import (
 )
 
 from universal_aws_data_pipeline_spark.config.registry import SchemaRegistry, merge_schemas
-from universal_aws_data_pipeline_spark.sinks.tables import unload_table
 from universal_aws_data_pipeline_spark.sources.files import read_source
 
 
@@ -85,17 +84,6 @@ def test_merge_schemas_rules():
     assert isinstance(m["tags"].dataType.elementType, DoubleType)  # array widen
     assert m.fieldNames()[-1] == "fresh"  # appended
     assert all(f.nullable for f in m.fields)
-
-
-def test_unload_table(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a", 2024), (2, "b", 2025)], "id LONG, v STRING, year INT")
-    out = str(tmp_path / "unload")
-    unload_table(df, out, partition_by=["year"])
-    back = spark.read.parquet(out)
-    assert back.count() == 2
-    import os
-
-    assert os.path.isdir(os.path.join(out, "year=2024"))
 
 
 def test_merge_rescue_mode_keeps_base_type_and_adds_rescue_col(spark):

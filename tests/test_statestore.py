@@ -1,6 +1,6 @@
 """Crash-injection tests for the directory commit protocol
-(``sinks/commit.py``) and the foreachBatch state, SCD2 and IVF commits
-built on or beside it.
+(``sinks/commit.py``) and the foreachBatch state folds (``statestore.fold_fn``:
+CMS, theta, SCD2, heavy hitters) and IVF commits built on or beside it.
 
 The two holes being regression-tested (round-4 ADVICE):
 1. a crash between the table->old and staging->table renames used to leave
@@ -367,6 +367,101 @@ def test_scd2_stream_crash_between_renames_replays(spark, tmp_path, monkeypatch)
         (2, "SEA", "2024-03-01", None, True),
     ]
     assert os.listdir(tmp_path) == ["dim"]
+
+
+def _hh_fold(spark, state, batches, k=4):
+    """Fold ``batches`` (lists of docs) into a heavy-hitters state in order;
+    returns the foreachBatch function for further calls."""
+    from universal_aws_data_pipeline_spark.operators.sketch import heavy_hitters_stream_fn
+
+    fn = heavy_hitters_stream_fn(state, k=k)
+    for bid, docs in enumerate(batches):
+        fn(_docs(spark, docs), bid)
+    return fn
+
+
+def _docs(spark, docs):
+    return spark.createDataFrame([(t,) for t in docs], "text STRING")
+
+
+def _hh_rows(spark, state):
+    from universal_aws_data_pipeline_spark.operators.sketch import heavy_hitters_from_state
+
+    return sorted(map(tuple, heavy_hitters_from_state(spark, state).collect()))
+
+
+_HH_BATCHES = [
+    ["hot hot hot warm cool", "hot warm mild"],
+    ["hot hot warm warm x y z", "hot q r s"],
+    ["hot hot hot hot t u v w", "warm warm"],
+]
+
+
+def test_heavy_hitters_commits_err_with_the_batch_id(spark, tmp_path):
+    """The Misra–Gries decrement total ``err`` rides in the counters'
+    ``_meta.json`` beside the batch id, so summary, ``err`` and replay
+    position land in one swap — no second table to fall out of step."""
+    state = str(tmp_path / "hh")
+    _hh_fold(spark, state, [["a a a b b c d"]], k=2)
+    # counts a3 b2 c1 d1: the (k+1)-th largest, 1, is subtracted
+    assert commit.read_meta(os.path.join(state, "counters")) == {"err": 1, "last_batch_id": 0}
+    assert os.listdir(state) == ["counters"]
+    assert _hh_rows(spark, state) == [("a", 2, 3), ("b", 1, 2)]
+
+
+def test_heavy_hitters_crash_between_renames_replays_to_the_clean_summary(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between batch 2's two renames, then its replay, leaves the
+    summary and ``err`` an uncrashed run commits. When ``err`` lived in a
+    separate table written after the counters, a crash between the two
+    writes replayed the batch into already-folded counters and pushed a
+    lower bound above the true count."""
+    clean = str(tmp_path / "clean")
+    _hh_fold(spark, clean, _HH_BATCHES)
+
+    crashed = str(tmp_path / "crashed")
+    fn = _hh_fold(spark, crashed, _HH_BATCHES[:2])
+    restore = _crash_on_rename(monkeypatch, 1)  # counters -> old, then crash
+    with pytest.raises(OSError, match="injected crash"):
+        fn(_docs(spark, _HH_BATCHES[2]), 2)
+    assert not os.path.exists(os.path.join(crashed, "counters"))
+    restore()
+    fn(_docs(spark, _HH_BATCHES[2]), 2)  # Structured Streaming's replay
+
+    assert _hh_rows(spark, crashed) == _hh_rows(spark, clean)
+    assert commit.read_meta(os.path.join(crashed, "counters")) == commit.read_meta(
+        os.path.join(clean, "counters")
+    )
+    assert os.listdir(crashed) == ["counters"]
+
+
+def test_heavy_hitters_two_table_layout_keeps_err_and_replay_position(spark, tmp_path):
+    """Upgrade path: a state dir in the two-table layout (``counters``
+    without ``_meta.json`` plus a ``meta`` table of err/last_batch_id)
+    reads with its ``err``, treats a replay of its last batch as a no-op,
+    and keeps accumulating ``err`` from where it stood; ``meta`` is gone
+    after the first fold."""
+    from universal_aws_data_pipeline_spark.operators.sketch import heavy_hitters_stream_fn
+
+    state = tmp_path / "hh"
+    spark.createDataFrame([("hot", 5), ("warm", 2)], "tok STRING, lb LONG").coalesce(1).write.parquet(
+        str(state / "counters")
+    )
+    spark.createDataFrame([(3, 1)], "err LONG, last_batch_id LONG").coalesce(1).write.parquet(
+        str(state / "meta")
+    )
+    before = [("hot", 5, 8), ("warm", 2, 5)]
+    assert _hh_rows(spark, str(state)) == before
+
+    fn = heavy_hitters_stream_fn(str(state), k=2)
+    fn(_docs(spark, ["hot hot"]), 1)  # replay of the last batch it folded
+    assert _hh_rows(spark, str(state)) == before
+    assert os.listdir(state) == ["counters"]
+
+    fn(_docs(spark, ["hot cool"]), 2)  # hot 6, warm 2, cool 1: subtract 1
+    assert commit.read_meta(str(state / "counters")) == {"err": 4, "last_batch_id": 2}
+    assert _hh_rows(spark, str(state)) == [("hot", 5, 9), ("warm", 1, 5)]
 
 
 # ---------------------------------------------------------------------------

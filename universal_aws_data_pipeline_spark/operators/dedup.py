@@ -879,12 +879,21 @@ def neardup_stream_fn(
     ``out_path``, and APPENDS the survivors' shingles/bands to the index, so
     later batches dedup against earlier batches as well as the base corpus.
 
-    Exactly-once via a per-batch marker dir under ``<index_path>/_applied``:
-    a replayed batch id (foreachBatch is at-least-once) skips both the
-    output write and the index append. Near-dup pairs arriving INSIDE one
-    micro-batch both survive (batch-vs-index semantics, same as the graded
-    q39 contract); compose with ``lsh_candidate_pairs`` on the batch when
-    intra-batch cohesion matters.
+    A per-batch marker dir under ``<index_path>/_applied``, made after
+    both appends, makes a replay of a finished batch id skip both. This is
+    NOT exactly-once across a crash: the index grows by append, not by a
+    swap, so it stays outside ``statestore.fold_fn``. A crash after the
+    ``out_path`` append and before the index append leaves the batch
+    unmarked; its replay probes an index that does not hold those
+    survivors yet and appends them to ``out_path`` a second time
+    (byte-identical rows — dedup downstream on the id). A crash after the
+    index append is harmless: the replay's survivors match themselves in
+    the index and nothing is appended again.
+
+    Near-dup pairs arriving INSIDE one micro-batch both survive
+    (batch-vs-index semantics, same as the graded q39 contract); compose
+    with ``lsh_candidate_pairs`` on the batch when intra-batch cohesion
+    matters.
     """
     import os
 

@@ -133,11 +133,10 @@ def agg_view_stream_fn(
     ``cdc_signed_rows``); the maintained view is then row-identical to a
     full group-by over the stream's net content at every commit point.
 
-    Delta merging is NOT idempotent (a re-folded batch double-counts), so
-    state lands through the crash-safe commit protocol in
-    ``operators/statestore.py`` — the folded batch id rides inside the
-    staged table and the directory swap is the single commit point, the
-    same discipline as the CMS/theta maintainers.
+    Folded into ``<state_path>/view`` by ``statestore.fold_fn``: delta
+    merging is NOT idempotent (a re-folded batch double-counts), so a
+    replayed batch id must never re-fold. Before the first commit the view
+    is seeded empty from the batch schema.
 
     State size is |groups| rows forever; per batch the work is one
     map-side-combinable aggregate over the batch plus a |groups|-row
@@ -149,23 +148,15 @@ def agg_view_stream_fn(
 
     from universal_aws_data_pipeline_spark.operators import statestore
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = os.path.join(state_path, "view")
-        statestore.recover(table)
-        if batch_id <= statestore.last_folded(table):
-            return  # replayed batch — already committed
-        if os.path.exists(table):
-            view = spark.read.parquet(table)
-        else:
+    def step(batch_df: DataFrame, batch_id: int, view: DataFrame | None, meta: dict):
+        if view is None:
             view = batch_df.select(*group_cols).limit(0)
             view = view.withColumn(count_col, F.lit(0).cast("long"))
             for m in measure_cols:
                 view = view.withColumn(m, F.lit(0).cast("long"))
-        merged = apply_cdc_to_agg(view, batch_df, group_cols, measure_cols, count_col)
-        statestore.commit(merged, table, batch_id)
+        return apply_cdc_to_agg(view, batch_df, group_cols, measure_cols, count_col), {}
 
-    return fn
+    return statestore.fold_fn(os.path.join(state_path, "view"), step)
 
 
 # Measured v1/v2 crossover (scripts/state_v2_overhead.py, PERF.md round 8):

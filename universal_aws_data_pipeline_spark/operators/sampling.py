@@ -498,12 +498,12 @@ def domain_cap_stream_fn(
     desc when given, else the q91 hash device — with the id as final
     tiebreak; admit ``rank <= remaining quota``; APPEND the admitted rows
     (id, domain, quality?, admit_rank, batch_id) to ``out_path``; fold the
-    per-domain admitted counts into the state table via the crash-safe
-    ``statestore`` commit protocol (state = one (domain, n_admitted) row
-    per domain ever seen — domain-bounded forever).
+    per-domain admitted counts into ``<state_path>/admitted`` through
+    ``statestore.fold_fn`` (state = one (domain, n_admitted) row per
+    domain ever seen — domain-bounded forever).
 
-    Replay safety (at-least-once): a batch id at or below the state's
-    last-folded marker is SKIPPED outright. The crash window between the
+    Replay safety (at-least-once): a replayed batch id never runs the
+    step, so its out-append does not repeat. The crash window between the
     out-append and the state commit is covered by determinism, the
     DP-release/token-cost contract: admissions are a pure function of
     (state, batch), and a pre-commit crash replays against the UNCHANGED
@@ -527,12 +527,7 @@ def domain_cap_stream_fn(
     if doc_cap < 1:
         raise ValueError(f"doc_cap must be >= 1, got {doc_cap}")
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = os.path.join(state_path, "admitted")
-        statestore.recover(table)
-        if batch_id <= statestore.last_folded(table):
-            return  # replayed batch — already committed
+    def step(batch_df: DataFrame, batch_id: int, state: DataFrame | None, meta: dict):
         ordering = (
             [F.col(quality_col).desc()] if quality_col else [hash_bucket(F.col(id_col))]
         ) + [F.col(id_col)]
@@ -540,9 +535,7 @@ def domain_cap_stream_fn(
         ranked = batch_df.withColumn(
             "admit_rank", F.row_number().over(w).cast("long")
         ).filter(F.col("admit_rank") <= doc_cap)  # literal bound: map-side prune
-        if os.path.exists(table):
-            state = spark.read.parquet(table)
-        else:
+        if state is None:
             # empty state inherits the batch's domain TYPE (a string-pinned
             # schema would break numeric domain keys at the union)
             state = (
@@ -576,8 +569,8 @@ def domain_cap_stream_fn(
         )
         # single-execution barrier (round-12 ADVICE): without it the
         # rank-window + state-join plan executes TWICE — once for the
-        # out_path append and again when `folded` materializes inside
-        # statestore.commit (determinism kept that correct, just wasteful)
+        # out_path append and again when `folded` materializes inside the
+        # state commit (determinism kept that correct, just wasteful)
         admitted = admitted.localCheckpoint(eager=True)
         # append BEFORE committing state (see docstring) — and only the
         # deterministic projection above, so a crash-window replay appends
@@ -592,9 +585,9 @@ def domain_cap_stream_fn(
             .groupBy(domain_col)
             .agg(F.sum("n_admitted").cast("long").alias("n_admitted"))
         )
-        statestore.commit(folded, table, batch_id)
+        return folded, {}
 
-    return fn
+    return statestore.fold_fn(os.path.join(state_path, "admitted"), step)
 
 
 def split_manifest(
@@ -706,10 +699,10 @@ def weighted_reservoir_stream_fn(
     + TakeOrderedAndProject over the batch, then a k-vs-k merge against
     the persisted sample; state is exactly k rows forever. The same
     determinism makes replays SAFE by construction (same rows → same keys
-    → same winners), but state still lands through the crash-safe
-    ``statestore`` commit protocol like every maintainer here, so a
-    replayed batch is skipped without even reading the corpus, and a
-    crash mid-swap cannot lose or double-fold the sample.
+    → same winners), but the sample is still folded into
+    ``<state_path>/sample`` by ``statestore.fold_fn`` like every
+    maintainer here, so a replayed batch is skipped without even reading
+    the corpus.
 
     Rows with non-positive weight are excluded by the
     ``weighted_sample_topk`` contract. The persisted sample carries
@@ -735,12 +728,7 @@ def weighted_reservoir_stream_fn(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = os.path.join(state_path, "sample")
-        statestore.recover(table)
-        if batch_id <= statestore.last_folded(table):
-            return  # replayed batch — already committed
+    def step(batch_df: DataFrame, batch_id: int, prev: DataFrame | None, meta: dict):
         # one slot per key on EVERY path: dedup the batch BEFORE the
         # top-k truncation (a duplicate surviving into the k-row batch
         # sample would burn a slot the next-best key should hold). Max
@@ -751,13 +739,12 @@ def weighted_reservoir_stream_fn(
             F.max(weight_col).alias(weight_col)
         )
         merged = weighted_sample_topk(batch_best, weight_col, k, key_col)
-        if os.path.exists(table):
+        if prev is not None:
             # state and batch sample are each key-unique; the union can
             # still repeat a key ACROSS them — keep the (es_key, weight)-
             # max row per key (deterministic struct-max), then re-truncate
             merged = (
-                spark.read.parquet(table)
-                .unionByName(merged)
+                prev.unionByName(merged)
                 .groupBy(key_col)
                 .agg(F.max(F.struct("es_key", weight_col)).alias("_m"))
                 .select(
@@ -768,6 +755,6 @@ def weighted_reservoir_stream_fn(
                 .orderBy(F.col("es_key").desc(), F.col(key_col))
                 .limit(k)
             )
-        statestore.commit(merged, table, batch_id)
+        return merged, {}
 
-    return fn
+    return statestore.fold_fn(os.path.join(state_path, "sample"), step)

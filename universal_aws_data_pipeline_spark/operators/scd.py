@@ -102,28 +102,23 @@ def scd2_stream_fn(
     ``scd2_apply`` — the streaming twin of the batch merge (q51), turning a
     CDC/update stream into a continuously-correct history table.
 
-    Exactly-once: the merged dimension is committed through
-    ``sinks/commit.py::replace_dir`` with the batch id in its
-    ``_meta.json`` — the same recover / replay-check / commit discipline as
-    the streaming state in ``operators/statestore.py``. A replayed batch id
-    at or below the committed one is skipped, so foreachBatch's
-    at-least-once delivery cannot double-close a version row, and a crash
-    mid-swap is healed by the next batch's ``recover``. The dimension is
-    read fresh per batch — state lives in parquet, not executor memory, so
-    the query survives restarts with no state-store coupling.
+    Folded by ``statestore.fold_fn`` with ``dim_path`` as the state
+    table, so foreachBatch's at-least-once delivery cannot double-close a
+    version row. The dimension must exist before the first batch (an
+    SCD2 merge has no empty seed); a missing one fails loudly. It is read
+    fresh per batch — state lives in parquet, not executor memory, so the
+    query survives restarts with no state-store coupling.
 
     Within one batch, at most ONE update row per key may be applied (the
     batch is pre-collapsed to the LATEST update per key by effective date —
     intermediate same-batch versions are not materialized, matching the
     one-close-one-open shape of scd2_apply).
     """
-    from universal_aws_data_pipeline_spark.sinks.commit import read_meta, recover, replace_dir
+    from universal_aws_data_pipeline_spark.operators import statestore
 
-    def fn(updates: DataFrame, batch_id: int) -> None:
-        recover(dim_path)
-        if batch_id <= (read_meta(dim_path) or {}).get("last_batch_id", -1):
-            return
-        spark = updates.sparkSession
+    def step(updates: DataFrame, batch_id: int, dim: DataFrame | None, meta: dict):
+        if dim is None:
+            raise FileNotFoundError(f"SCD2 dimension {dim_path} does not exist")
         # latest update per key wins within the micro-batch
         latest = (
             updates.groupBy(key)
@@ -132,11 +127,9 @@ def scd2_stream_fn(
             )
             .select(key, *[F.col(f"_u.{c}").alias(c) for c in [effective, *tracked]])
         )
-        dim = spark.read.parquet(dim_path)
-        merged = scd2_apply(dim, latest, key, tracked, effective, **scd_kwargs)
-        replace_dir(dim_path, merged.write.mode("overwrite").parquet, {"last_batch_id": batch_id})
+        return scd2_apply(dim, latest, key, tracked, effective, **scd_kwargs), {}
 
-    return fn
+    return statestore.fold_fn(dim_path, step)
 
 
 def scd2_asof(dim: DataFrame, asof, valid_from: str = "valid_from", valid_to: str = "valid_to") -> DataFrame:

@@ -34,6 +34,8 @@ plans/catalog.py.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Iterator
 
 import numpy as np
@@ -43,6 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from universal_aws_data_pipeline_spark.functions.texthash import tokens_col
+from universal_aws_data_pipeline_spark.operators import statestore
+from universal_aws_data_pipeline_spark.sinks import commit as dircommit
 
 _CAND_SCHEMA = StructType([StructField("tok", StringType(), False)])
 
@@ -106,14 +110,33 @@ def heavy_hitters_exact(
 # Streaming twin: mergeable Misra–Gries summary maintained across micro-batches
 # ---------------------------------------------------------------------------
 
-def _read_meta(spark, meta_path: str) -> tuple[int, int]:
-    """(decrement_total, last_batch_id) from the state meta, (0, -1) if new."""
-    import os
+def _legacy_meta(spark, state_path: str) -> dict | None:
+    """``err`` and ``last_batch_id`` from the ``meta`` parquet table that
+    the first maintainer generation wrote beside ``counters``; None when
+    the state dir has no such table."""
+    path = os.path.join(state_path, "meta")
+    if not os.path.exists(path):
+        return None
+    row = spark.read.parquet(path).head()
+    return {"err": int(row["err"]), "last_batch_id": int(row["last_batch_id"])}
 
-    if not os.path.exists(meta_path):
-        return 0, -1
-    row = spark.read.parquet(meta_path).head()
-    return int(row["err"]), int(row["last_batch_id"])
+
+def _adopt_legacy_meta(spark, state_path: str) -> None:
+    """Upgrade a state dir from the two-table layout: ``counters`` without
+    ``_meta.json`` plus a ``meta`` table. Its ``err`` and replay position
+    move into the counters' ``_meta.json`` (an atomic file replace), then
+    ``meta`` is removed — in that order, so a crash in between leaves a
+    migrated table and a stale ``meta`` the next fold removes. ``meta``
+    without ``counters`` describes lost state and is dropped, so the
+    rebuilt summary folds every batch (statestore's rule for orphaned
+    ``_batch_N`` markers)."""
+    legacy = _legacy_meta(spark, state_path)
+    if legacy is None:
+        return
+    counters = os.path.join(state_path, "counters")
+    if os.path.exists(counters) and dircommit.read_meta(counters) is None:
+        dircommit._write_json(os.path.join(counters, dircommit._META), legacy)
+    shutil.rmtree(os.path.join(state_path, "meta"), ignore_errors=True)
 
 
 def heavy_hitters_stream_fn(
@@ -135,48 +158,37 @@ def heavy_hitters_stream_fn(
     - every token with true count > err survives (err ≤ N/(k+1) over the
       whole stream, so nothing genuinely heavy is ever lost)
 
-    Batch ids are recorded in the meta; a replayed batch (foreachBatch's
-    at-least-once contract) is skipped — state updates are exactly-once.
-    Only the (k+1)-row decrement probe and the ≤ k-row state touch the
-    driver; batch counting stays distributed.
+    Folded by ``statestore.fold_fn`` into ``<state_path>/counters``; ``err``
+    rides in the same ``_meta.json`` as the batch id, so summary and
+    decrement total commit in one swap and a replay can never re-subtract.
+    Only the (k+1)-row decrement probe touches the driver; batch counting
+    stays distributed.
     """
-    import os
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        counters_path = os.path.join(state_path, "counters")
-        meta_path = os.path.join(state_path, "meta")
-        err, last_id = _read_meta(spark, meta_path)
-        if batch_id <= last_id:
-            return  # replayed batch: already folded in
-        batch_counts = (
+    def step(batch_df: DataFrame, batch_id: int, prev: DataFrame | None, meta: dict):
+        combined = (
             batch_df.select(F.explode(tokens_col(F.col(text_col))).alias("tok"))
             .groupBy("tok")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if os.path.exists(counters_path):
-            prev = [(r["tok"], r["lb"]) for r in spark.read.parquet(counters_path).collect()]
-        else:
-            prev = []
-        if prev:
-            prev_df = spark.createDataFrame(prev, "tok STRING, cnt LONG")
-            combined = batch_counts.unionByName(prev_df).groupBy("tok").agg(F.sum("cnt").alias("cnt"))
-        else:
-            combined = batch_counts
+        if prev is not None:
+            combined = (
+                combined.unionByName(prev.select("tok", F.col("lb").alias("cnt")))
+                .groupBy("tok")
+                .agg(F.sum("cnt").alias("cnt"))
+            )
         top = combined.orderBy(F.col("cnt").desc(), "tok").limit(k + 1).collect()
         d = int(top[k]["cnt"]) if len(top) > k else 0
-        new_state = (
-            combined.filter(F.col("cnt") > d)
-            .select("tok", (F.col("cnt") - d).alias("lb"))
-        )
-        # materialize before overwriting the path we may have just read
-        rows = [(r["tok"], r["lb"]) for r in new_state.collect()]
-        spark.createDataFrame(rows, "tok STRING, lb LONG").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(counters_path)
-        spark.createDataFrame(
-            [(err + d, batch_id)], "err LONG, last_batch_id LONG"
-        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
+        summary = combined.filter(F.col("cnt") > d).select("tok", (F.col("cnt") - d).alias("lb"))
+        # one file: the shuffle carries <= k rows, and unlike coalesce(1)
+        # it leaves the batch aggregation parallel
+        return summary.repartition(1), {"err": meta.get("err", 0) + d}
+
+    fold = statestore.fold_fn(os.path.join(state_path, "counters"), step)
+
+    def fn(batch_df: DataFrame, batch_id: int) -> None:
+        _adopt_legacy_meta(batch_df.sparkSession, state_path)
+        fold(batch_df, batch_id)
 
     return fn
 
@@ -184,11 +196,11 @@ def heavy_hitters_stream_fn(
 def heavy_hitters_from_state(spark, state_path: str) -> DataFrame:
     """Read the streaming MG state: (tok, cnt_lb, cnt_ub) where
     cnt_lb ≤ true ≤ cnt_ub = cnt_lb + accumulated decrement."""
-    import os
-
-    err, _ = _read_meta(spark, os.path.join(state_path, "meta"))
+    counters = os.path.join(state_path, "counters")
+    meta = dircommit.read_meta(counters) or _legacy_meta(spark, state_path) or {}
+    err = meta.get("err", 0)
     return (
-        spark.read.parquet(os.path.join(state_path, "counters"))
+        spark.read.parquet(counters)
         .select("tok", F.col("lb").alias("cnt_lb"), (F.col("lb") + err).alias("cnt_ub"))
     )
 
@@ -222,41 +234,25 @@ def theta_sketch_stream_fn(
 
     Per micro-batch: the batch collapses to its own (day, h) kept rows
     (map-side filter prunes 1−θ of the hash space before any shuffle),
-    unions with the stored table, distincts, and lands via the
-    crash-safe commit protocol in ``operators/statestore.py`` — the
-    folded batch id rides inside the staged table, so the swap is the
-    single commit point: a crash at ANY instruction either keeps the old
-    state (and replays the batch) or lands the new state (and skips the
-    replay). Exactly-once without marker dirs. The rewrite touches
+    unions with the stored table and distincts — folded into
+    ``<state_path>/sketch`` by ``statestore.fold_fn``. The rewrite touches
     θ·D·|days| sketch rows, never the stream history; at 100 TB/day the
     sketch table is megabytes.
 
     Estimates come from ``theta_estimate_from_state`` — distinct-over-
     union by construction, identical to rerunning q90/q97 over the full
     history (asserted in tests)."""
-    import os
 
-    from universal_aws_data_pipeline_spark.operators import statestore
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = os.path.join(state_path, "sketch")
-        statestore.recover(table)
-        if batch_id <= statestore.last_folded(table):
-            return  # replayed batch — already committed
+    def step(batch_df: DataFrame, batch_id: int, prev: DataFrame | None, meta: dict):
         day = F.floor(F.unix_timestamp(F.col(ts_col)) / 86400).cast("long")
         batch_sk = (
             batch_df.select(day.alias("day"), _theta_hash(F.col(user_col)).alias("h"))
             .filter(F.col("h") < theta)
             .distinct()
         )
-        if os.path.exists(table):
-            merged = spark.read.parquet(table).unionByName(batch_sk).distinct()
-        else:
-            merged = batch_sk
-        statestore.commit(merged, table, batch_id)
+        return (batch_sk if prev is None else prev.unionByName(batch_sk).distinct()), {}
 
-    return fn
+    return statestore.fold_fn(os.path.join(state_path, "sketch"), step)
 
 
 def theta_estimate_from_state(
@@ -268,8 +264,6 @@ def theta_estimate_from_state(
     """(day, est_users) trailing-``window_days`` distinct estimates from the
     stored sketch table — sketch MERGE (set union over the explode of day
     offsets), exactly the q97 kernel, running on the tiny stored state."""
-    import os
-
     sk = spark.read.parquet(os.path.join(state_path, "sketch"))
     scale = (1 << 32) // theta
     if window_days == 1:
@@ -410,41 +404,30 @@ def cms_stream_fn(
     (union of streams = sum of sketches — asserted batch-side in tests).
 
     Per micro-batch: the batch collapses to its own <= depth*width cell
-    table (map-side combine absorbs the token stream), outer-merges with
-    the stored table by summing counts, and lands via the crash-safe
-    commit protocol in ``operators/statestore.py``. CMS merge is
-    cell-wise SUM, so a re-folded replay would DOUBLE-COUNT — which is
-    exactly why the folded batch id must commit atomically with the
-    state (it rides inside the staged table; the directory swap is the
-    single commit point). The rewrite touches depth*width rows however
-    long the stream has run — frequency state that never grows.
+    table (map-side combine absorbs the token stream) and outer-merges
+    with the stored table by summing counts — folded into
+    ``<state_path>/cells`` by ``statestore.fold_fn``. Cell-wise SUM is
+    not idempotent: a re-folded replay would DOUBLE-COUNT, which is why
+    the batch id must commit with the cells. The rewrite touches
+    depth*width rows however long the stream has run — frequency state
+    that never grows.
 
     Point estimates at any time: ``cms_estimates(spark.read.parquet(
     <state>/cells), probes, col)`` — identical to building one batch CMS
     over the full history (asserted in tests)."""
-    import os
 
-    from universal_aws_data_pipeline_spark.operators import statestore
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = os.path.join(state_path, "cells")
-        statestore.recover(table)
-        if batch_id <= statestore.last_folded(table):
-            return  # replayed batch — already committed
+    def step(batch_df: DataFrame, batch_id: int, prev: DataFrame | None, meta: dict):
         batch_cells = count_min_build(batch_df, col, depth=depth, width=width)
-        if os.path.exists(table):
-            merged = (
-                spark.read.parquet(table)
-                .unionByName(batch_cells)
-                .groupBy("row", "bucket")
-                .agg(F.sum("cell_count").alias("cell_count"))
-            )
-        else:
-            merged = batch_cells
-        statestore.commit(merged, table, batch_id)
+        if prev is None:
+            return batch_cells, {}
+        merged = (
+            prev.unionByName(batch_cells)
+            .groupBy("row", "bucket")
+            .agg(F.sum("cell_count").alias("cell_count"))
+        )
+        return merged, {}
 
-    return fn
+    return statestore.fold_fn(os.path.join(state_path, "cells"), step)
 
 
 # ---------------------------------------------------------------------------
@@ -527,9 +510,9 @@ def histogram_stream_fn(
 ):
     """foreachBatch maintainer for the ``value_histogram`` quantile sketch:
     each micro-batch's bin counts fold into the stored <=n_bins-row table
-    by count ADDITION through the crash-safe statestore commit (sum-merge
-    is NOT idempotent, so the folded batch id must commit atomically with
-    the state — the identical discipline as ``cms_stream_fn``). Quantile
+    ``<state_path>/bins`` by count ADDITION through ``statestore.fold_fn``
+    (sum-merge is NOT idempotent, so a replayed batch must never re-fold —
+    as for ``cms_stream_fn``). Quantile
     estimates at any time: ``histogram_quantiles(spark.read.parquet(
     <state>/bins), ...)`` — identical to one batch histogram over the full
     history (asserted in tests). State is bounded at n_bins rows forever.
@@ -538,31 +521,16 @@ def histogram_stream_fn(
     value (e.g. ``"cast(round(price * 100, 0) as bigint)"``) — a string so
     the closure stays picklable into the stream runner.
     """
-    import os
 
-    from universal_aws_data_pipeline_spark.operators import statestore
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = os.path.join(state_path, "bins")
-        statestore.recover(table)
-        if batch_id <= statestore.last_folded(table):
-            return  # replayed batch — already committed
+    def step(batch_df: DataFrame, batch_id: int, prev: DataFrame | None, meta: dict):
         batch_bins = value_histogram(
             batch_df, F.expr(value_expr), lo_cents, width_cents, n_bins
         )
-        if os.path.exists(table):
-            merged = (
-                spark.read.parquet(table)
-                .unionByName(batch_bins)
-                .groupBy("bin")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = batch_bins
-        statestore.commit(merged, table, batch_id)
+        if prev is None:
+            return batch_bins, {}
+        return prev.unionByName(batch_bins).groupBy("bin").agg(F.sum("c").alias("c")), {}
 
-    return fn
+    return statestore.fold_fn(os.path.join(state_path, "bins"), step)
 
 
 def grouped_value_histogram(

@@ -1,27 +1,38 @@
-"""Crash-safe commit of small foreachBatch state tables.
+"""One crash-safe fold for every foreachBatch state maintainer.
 
-The streaming sketch maintainers (theta, CMS, and friends) persist their
-bounded state as a parquet directory that is atomically replaced every
-micro-batch through ``sinks/commit.py::replace_dir``. **The folded batch id
-travels inside the staged table itself** (``_meta.json``, the commit's
-completeness sentinel), so state and replay marker become visible in the
-same swap, and ``recover`` can always tell a complete staging from a
-partial one. That closes both holes of a bare two-rename swap: a crash
-between the renames no longer loses the table (the complete staging is
-promoted), and a crash after the swap can no longer re-fold the batch on
-replay (the marker was committed with it).
+Every maintainer that carries state between micro-batches — theta, CMS,
+histogram and heavy hitters (``sketch.py``), the agg view
+(``incremental.py``), domain cap and weighted reservoir (``sampling.py``)
+and the SCD2 dimension (``scd.py``) — is ``fold_fn(table, step)``: the
+closure keeps only its merge, and this module owns the rest. The state is
+a parquet directory atomically replaced every micro-batch through
+``sinks/commit.py::replace_dir``. **The folded batch id travels inside the
+staged table itself** (``_meta.json``, the commit's completeness
+sentinel), so state and replay marker become visible in the same swap,
+and ``recover`` can always tell a complete staging from a partial one. A
+crash between the renames cannot lose the table (the complete staging is
+promoted), and a crash after the swap cannot re-fold the batch on replay
+(the marker was committed with it).
 
-Protocol per batch:
+Protocol per batch, as ``fold_fn`` runs it:
 
-    recover(table)                      # heal any interrupted prior swap
-    if batch_id <= last_folded(table):  # replay — already committed
-        return
-    commit(merged, table, batch_id)     # replace_dir with the batch id
+    recover(table)                          # heal any interrupted prior swap
+    if batch_id <= last_folded(table):      # replay — already committed
+        return                              # (step never runs)
+    prev = <committed table> or None
+    state, meta_out = step(batch_df, batch_id, prev, meta)  # meta: committed
+    commit(state, table, batch_id, **meta_out)  # _meta.json = {**meta_out,
+                                                #   "last_batch_id": batch_id}
 
-This module adds only the replay position and the migration of the first
-maintainer generation's ``_batch_N`` sibling marker dirs. The commit itself
-needs a real filesystem, which Structured Streaming already requires for
-checkpoint-adjacent state.
+``step`` returns the new state lazily; it may read ``prev`` because the
+commit writes a staging dir, never the path it reads. Anything a step
+writes besides the state (domain cap's admitted log) happens before the
+commit, so a crash in between replays the step against unchanged state.
+
+This module adds only the fold, the replay position and the migration of
+the first maintainer generation's ``_batch_N`` sibling marker dirs. The
+commit itself needs a real filesystem, which Structured Streaming already
+requires for checkpoint-adjacent state.
 """
 
 from __future__ import annotations
@@ -107,11 +118,14 @@ def last_folded(table: str) -> int:
     return int(meta["last_batch_id"])
 
 
-def commit(merged, table: str, batch_id: int) -> None:
+def commit(merged, table: str, batch_id: int, **meta) -> None:
     """Write ``merged`` (a DataFrame) as the new state of ``table`` with
-    the batch id embedded. Callers must have run :func:`recover` and the
-    :func:`last_folded` replay check first."""
-    dircommit.replace_dir(table, merged.write.mode("overwrite").parquet, {"last_batch_id": batch_id})
+    ``meta`` and the batch id embedded in its ``_meta.json``. Callers must
+    have run :func:`recover` and the :func:`last_folded` replay check
+    first."""
+    dircommit.replace_dir(
+        table, merged.write.mode("overwrite").parquet, {**meta, "last_batch_id": batch_id}
+    )
     # first new-protocol commit supersedes any legacy sibling markers — but
     # they are parent-scoped and another meta-less table under the same
     # parent may still be reading them, so drop them only once every
@@ -119,3 +133,23 @@ def commit(merged, table: str, batch_id: int) -> None:
     if not _has_meta_less_sibling(table):
         for d in _legacy_marker_dirs(table):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def fold_fn(table: str, step):
+    """The ``foreachBatch`` function that folds each micro-batch into the
+    state ``table`` through ``step(batch_df, batch_id, prev, meta)`` — see
+    the module docstring. ``prev`` is the committed state as a DataFrame
+    (None before the first commit), ``meta`` its ``_meta.json`` ({} when
+    none); ``step`` returns ``(state, meta_out)``. A replayed batch id
+    never runs ``step``."""
+
+    def fn(batch_df, batch_id: int) -> None:
+        recover(table)
+        if batch_id <= last_folded(table):
+            return  # replayed batch — already committed
+        meta = dircommit.read_meta(table) or {}
+        prev = batch_df.sparkSession.read.parquet(table) if os.path.exists(table) else None
+        state, meta_out = step(batch_df, batch_id, prev, meta)
+        commit(state, table, batch_id, **meta_out)
+
+    return fn

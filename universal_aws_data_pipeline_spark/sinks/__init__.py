@@ -1,6 +1,5 @@
 from universal_aws_data_pipeline_spark.sinks.tables import (  # noqa: F401
     TolerantLoadError,
-    unload_table,
     write_partitioned,
     write_warehouse_table,
 )

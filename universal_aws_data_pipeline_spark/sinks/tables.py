@@ -232,15 +232,3 @@ def write_warehouse_jdbc(
         record_count_out.update(counts)
     return counts["record_count"]
 
-
-def unload_table(df: DataFrame, path: str, fmt: str = "parquet", partition_by: list[str] | None = None) -> None:
-    """Warehouse UNLOAD — table → files export (the reference claims this at
-    README.md:148 but never implements it). Spark-native: a plain
-    DataFrameWriter; with ``partition_by``, consumers get partition-pruned
-    reads on the exported layout."""
-    writer = df.write.format(fmt).mode("overwrite")
-    if partition_by:
-        writer = df.repartition(*[F.col(c) for c in partition_by]).write.format(fmt).mode("overwrite").partitionBy(
-            *partition_by
-        )
-    writer.save(path)

@@ -100,25 +100,3 @@ def read_source(
         return reader.format("binaryFile").load(path)
     raise ValueError(f"unsupported data_format {data_format!r}")
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Load the test-data star schema from a scale-factor directory and register
-    temp views (so both the DataFrame API and spark.sql can address them)."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

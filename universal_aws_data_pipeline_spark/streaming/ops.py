@@ -172,7 +172,10 @@ def write_stream_sink(
 
     The last three are NAMED foreachBatch maintainers — the YAML-reachable
     form of the streaming twins (a config file cannot carry a Python
-    callable, so each exactly-once maintainer gets a declarative spelling):
+    callable, so each maintainer gets a declarative spelling). SCD2 and
+    heavy hitters fold through ``statestore.fold_fn`` and are exactly-once;
+    near-dup dedup is not: a crash between its output append and its index
+    append makes the replay append that batch's survivors again:
 
     - ``{type: neardup_dedup, index_path, out_path, threshold?, column?}``
       — per-batch probe of the persisted LSH band index, survivors written
