@@ -424,6 +424,46 @@ def test_directories_commit_only_through_the_commit_module():
     assert offenders == [], offenders
 
 
+def test_plans_read_parquet_only_through_the_read_helper():
+    """One way to read a table: every parquet read in ``plans/`` goes
+    through ``plans/_shared.py::_read_parquet``, which infers a table's
+    schema once per session and reuses it while the files are unchanged.
+    A ``.read....parquet(`` call anywhere else in the package's plans
+    (a bare read that re-infers the schema on every call) fails here."""
+    import ast
+    import pathlib
+
+    import universal_aws_data_pipeline_spark.plans as plans_mod
+
+    def reads_parquet(call: ast.Call) -> bool:
+        f = call.func
+        if not (isinstance(f, ast.Attribute) and f.attr == "parquet"):
+            return False
+        node = f.value
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    plans = pathlib.Path(plans_mod.__file__).parent
+    offenders = []
+    for path in sorted(plans.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        helper = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and path.name == "_shared.py" and fn.name == "_read_parquet"
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"{path.relative_to(plans)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and id(n) not in helper and reads_parquet(n)
+        ]
+    assert offenders == [], offenders
+
+
 def test_stream_maintainers_fold_only_through_fold_fn():
     """Every foreachBatch state maintainer folds through
     ``operators/statestore.py::fold_fn``, which owns recover → replay check

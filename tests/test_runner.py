@@ -142,6 +142,32 @@ def test_corrupt_record_survives_mapping_maxerror(spark, tmp_path):
     assert "max_errors" in result2.error
 
 
+def test_max_errors_zero_fails_on_any_corrupt_line(spark, tmp_path):
+    """MAXERROR 0, the default, is the strictest cap: one corrupt line fails
+    a partitioned load, and the table committed before the run stays as it
+    was — no corrupt row, no ``_corrupt_record`` column."""
+    good = {"id": 1, "profile": {"name": "a", "city": "B"}, "balance": "1", "created": "2024-03-01"}
+    clean, dirty = tmp_path / "clean", tmp_path / "dirty"
+    clean.mkdir()
+    dirty.mkdir()
+    (clean / "part-0.json").write_text(json.dumps(good) + "\n")
+    (dirty / "part-0.json").write_text(json.dumps({**good, "id": 2}) + "\n" + '{"id": 3, broken\n')
+    dest = {"path": str(tmp_path / "out"), "partition_by": ["year", "month"]}
+    runner = PipelineRunner(spark, clock=lambda: dt.datetime(2026, 1, 1))
+
+    ok = runner.run(_cfg(str(clean), tmp_path, destination=dest))
+    assert (ok.status, ok.record_count, ok.error_count) == ("success", 1, 0), ok.error
+    listing = sorted(os.listdir(dest["path"]))
+
+    bad = runner.run(_cfg(str(dirty), tmp_path, destination=dest))
+    assert bad.status == "failed"
+    assert "1 corrupt records > max_errors=0" in bad.error
+    assert sorted(os.listdir(dest["path"])) == listing
+    back = spark.read.parquet(dest["path"])
+    assert "_corrupt_record" not in back.columns
+    assert [r["customer_id"] for r in back.collect()] == [1]
+
+
 def test_run_stream_source(spark, tmp_path):
     # type: stream through run(): micro-batches drain via availableNow,
     # quality gate + append write happen per-batch in foreachBatch.

@@ -29,6 +29,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from universal_aws_data_pipeline_spark.config.model import QualityCheck, SchemaConfig, TransformationSpec
 from universal_aws_data_pipeline_spark.operators.quality import quality_check_df
@@ -37,13 +38,23 @@ from universal_aws_data_pipeline_spark.sinks.commit import read_meta, replace_di
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a test table. ``events.ts`` is physically TIMESTAMP(NANOS).
-    Depending on the session, it surfaces as one of: native TIMESTAMP_NTZ
-    (ns→µs truncation, same as DuckDB — what the pinned PySpark 4.1.2 does
-    on a plain session), raw nanos ``bigint`` when the session has the
+    """Load a test table through ``_read_parquet``: the first read of a
+    table in a session infers its schema from the file footers (one Spark
+    job); later reads supply that schema and launch no job. The memo key is
+    the session's ``applicationId``, the reader confs that change inference
+    (``_SCHEMA_CONFS``) and the (relative path, size, mtime_ns) of every
+    file of the table. A new session, a flipped conf, or any file added,
+    removed or rewritten forces re-inference, so a changed schema is never
+    read silently.
+
+    ``events.ts`` is TIMESTAMP(MICROS) in the test datasets; a copy may be
+    TIMESTAMP(NANOS). Depending on the file and the session, it surfaces as
+    one of: native TIMESTAMP_NTZ (a MICROS file), raw nanos ``bigint`` for a
+    NANOS file when the session has the
     ``spark.sql.legacy.parquet.nanosAsLong`` escape hatch on (``session.py::
     get_spark`` sets it at build time; this function never mutates session
-    conf), or plain TIMESTAMP for re-written copies of the table. Whatever
+    conf; with it off, the pinned PySpark 4.1.2 rejects a NANOS column), or
+    plain TIMESTAMP for re-written copies of the table. Whatever
     the branch, the column is normalized to TIMESTAMP_NTZ so every
     downstream expression sees one type regardless of reader/session. The
     bigint branch truncates nanos to micros with exact integer division
@@ -51,8 +62,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     normalization is pure epoch arithmetic (``timestampadd`` onto the NTZ
     epoch literal) — no LTZ intermediate, so a non-UTC session timezone
     cannot shift wall clocks between branches."""
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":
             df = df.withColumn(
@@ -64,8 +75,39 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts",
                 F.expr("timestampadd(MICROSECOND, unix_micros(ts), TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
             )
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return df
+
+
+# Parquet reader confs that change the schema inferred from the same files
+# (each one flips a column's type, or inference fails outright).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (key, schema) of its last inferred read; StructTypes only, so the
+# memo holds nothing on the JVM side
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The one parquet read of the plans package. Infers ``path``'s schema
+    on a memo miss and reads with the memoized schema (no footer-scan job)
+    while the key — session, ``_SCHEMA_CONFS`` values, file stats under
+    ``path`` — is unchanged. A path with no local files to stat (missing,
+    remote) is inferred on every read."""
+    files = _file_stats(path)
+    key = (spark.sparkContext.applicationId, tuple(spark.conf.get(c) for c in _SCHEMA_CONFS), files)
+    hit = _SCHEMAS.get(path)
+    if files and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if files:
+        _SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 def _artifact_dir(kind: str, sf_dir: str) -> str:
@@ -87,17 +129,21 @@ def _artifact_dir(kind: str, sf_dir: str) -> str:
 _BUILD_DEPS: ContextVar[dict[str, str] | None] = ContextVar("_BUILD_DEPS", default=None)
 
 
-def _fingerprint(sf_dir: str) -> list[list]:
-    """(relative path, size, mtime) of every file of the dataset's tables:
-    the ``<name>.parquet`` files or dirs ``_t`` reads under ``sf_dir``."""
+def _file_stats(root: str, keep: Callable[[str], bool] = lambda name: True) -> list[list]:
+    """Sorted (relative path, size, mtime_ns) of every file under ``root``,
+    or of ``root`` itself when it is a file; ``keep`` filters the entries
+    directly under ``root``. Empty when ``root`` is not on the local disk."""
+    if os.path.isfile(root):
+        st = os.stat(root)
+        return [[os.path.basename(root), st.st_size, st.st_mtime_ns]]
     out = []
-    for root, dirs, files in os.walk(sf_dir):
-        if root == sf_dir:
-            dirs[:] = [d for d in dirs if d.endswith(".parquet")]
-            files = [f for f in files if f.endswith(".parquet")]
+    for d, dirs, files in os.walk(root):
+        if d == root:
+            dirs[:] = [x for x in dirs if keep(x)]
+            files = [x for x in files if keep(x)]
         for f in files:
-            st = os.stat(os.path.join(root, f))
-            out.append([os.path.relpath(os.path.join(root, f), sf_dir), st.st_size, st.st_mtime_ns])
+            st = os.stat(os.path.join(d, f))
+            out.append([os.path.relpath(os.path.join(d, f), root), st.st_size, st.st_mtime_ns])
     return sorted(out)
 
 
@@ -119,7 +165,8 @@ def _artifact(
     contain the build subtree."""
     path = os.path.join(_artifact_dir(kind, sf_dir), name)
     meta = read_meta(path)
-    inputs = _fingerprint(sf_dir)
+    # the <name>.parquet files or dirs ``_t`` reads under sf_dir
+    inputs = _file_stats(sf_dir, lambda name: name.endswith(".parquet"))
     fresh = (
         meta is not None
         and meta["inputs"] == inputs
@@ -137,7 +184,7 @@ def _artifact(
     outer = _BUILD_DEPS.get()
     if outer is not None:
         outer[path] = meta["commit"]
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 # Hard ceiling on any driver-collected literal set (ANN query vectors, probe

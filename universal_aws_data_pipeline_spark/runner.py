@@ -43,7 +43,7 @@ from universal_aws_data_pipeline_spark.operators.quality import (
     enforce_quality_checks,
 )
 from universal_aws_data_pipeline_spark.operators.transform import transform_chain
-from universal_aws_data_pipeline_spark.sinks.tables import write_partitioned, write_warehouse_table
+from universal_aws_data_pipeline_spark.sinks.tables import CORRUPT_COL, write_partitioned, write_warehouse_table
 from universal_aws_data_pipeline_spark.sources.files import read_source
 from universal_aws_data_pipeline_spark.sources.rest import rest_api_source
 
@@ -280,7 +280,10 @@ class PipelineRunner:
                 # checkpoint block cannot fail every retry.
                 attempts = itertools.chain([ready], itertools.repeat(transformed))
                 with _stage(result, "write"):
-                    if dest.jdbc_url or dest.dist_key or dest.sort_keys or dest.max_errors:
+                    # A feed with corrupt lines carries CORRUPT_COL even when the
+                    # read was not tolerant: MAXERROR (0 by default) gates it.
+                    if (dest.jdbc_url or dest.dist_key or dest.sort_keys or dest.max_errors
+                            or CORRUPT_COL in transformed.columns):
                         counts: dict[str, int] = {}
                         _with_retry("load", lambda: write_warehouse_table(next(attempts), dest, counts),
                                     cfg.retry, self.sleep)
